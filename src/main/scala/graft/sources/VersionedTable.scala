@@ -24,6 +24,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the compacted ones; appends that raced in land in later versions
   *     and are rebased over, never lost. Old data files stay on disk for
   *     older-snapshot readers until [[vacuum]].
+  *   - every writer goes through ONE commit loop, `commitLoop`: read the
+  *     latest manifest, let the op decide (finish early, or stage files
+  *     and build the next manifest), publish through `tryCommit`, and on
+  *     a lost race delete that attempt's files and retry — 20 times, then
+  *     `IllegalStateException("<op> lost 20 commit races")`. Metadata
+  *     lines carry forward through one rule, `metaLines`. The conflict
+  *     rule is the one per-op decision:
+  *       - metadata commits, append, overwrite, replaceTable, the
+  *         idempotent appends, deleteByKeys, deleteWhereMergeOnRead: none
+  *         beyond the version race — a lost race rebuilds the manifest
+  *         from the new latest one (deleteWhereMergeOnRead rescans);
+  *       - compact: every input file still live and the delete layer
+  *         unchanged; raced appends are rebased over;
+  *       - upsert: compact's rule, plus no raced file whose footer key
+  *         range intersects the update keys;
+  *       - update, replaceWhere, delete, materializeFieldIds: the data
+  *         file set and the delete layer both unchanged;
+  *       - restore: no commit at all since its snapshot read;
+  *       - commitReplaceFiles (SQL row-level rewrites): the statement's
+  *         scanned snapshot and layer, else a
+  *         `ConcurrentModificationException` (the caller re-runs).
   *
   * ==Migration seam to Delta Lake / Iceberg==
   * This protocol is deliberately a strict subset of Delta's: immutable
@@ -104,7 +125,7 @@ object VersionedTable {
   private val FidPrefix = "#fid "
   private val CdcPrefix = "#cdc "
   // "#stats <file> <json>": per-data-file column bounds ([[FileStats]])
-  // for plan-time skipping. NOT carried by the hand-built meta sites:
+  // for plan-time skipping. NOT carried by [[metaLines]]:
   // [[tryCommit]] itself reconciles them every commit — carrying lines
   // for retained files from the previous manifest, computing fresh ones
   // from the just-written parquet footers, dropping lines whose file
@@ -113,9 +134,9 @@ object VersionedTable {
   // "#tag <name> <version>": named snapshot refs (Iceberg tag
   // semantics) — time travel by name (`VERSION AS OF 'prod'`, reader
   // option versionAsOf=prod), vacuum-protected. Carried by EVERY
-  // commit (metaLines whitelist + the hand-built replaceTable/restore
-  // meta sites); a tag pins a version, never files, so structural
-  // rewrites and restores cannot invalidate it.
+  // commit (the metaLines whitelist, plus restore's own meta lines); a
+  // tag pins a version, never files, so structural rewrites and
+  // restores cannot invalidate it.
   private val TagPrefix = "#tag "
 
   /** The table property that turns on write-time CDC files. */
@@ -351,10 +372,8 @@ object VersionedTable {
     * SQL `ALTER ... SET DEFAULT` semantics, same as Delta).
     */
   def setColumnDefault(spark: SparkSession, table: String, column: String,
-      default: Option[String], maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+      default: Option[String]): Long =
+    commitLoop(spark, table, "setColumnDefault") { (_, lines) =>
       val declared = schemaLine(lines).getOrElse(
         throw new IllegalStateException(
           s"setColumnDefault needs a declared schema on $table"))
@@ -371,14 +390,9 @@ object VersionedTable {
       }
       val ns = org.apache.spark.sql.types.StructType(
         declared.fields.updated(idx, f.copy(metadata = mb.build())))
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "set-default", newSchema = Some(ns)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      commit(metaLines(lines, "set-default", newSchema = Some(ns)) ++
+        dataFiles(lines))
     }
-    throw new IllegalStateException(
-      s"setColumnDefault lost $maxRetries commit races")
-  }
 
   /** Validate a [[ClusterByProperty]] spec against a schema (None =
     * pre-schema table, columns unknowable — allow). Shared by
@@ -404,14 +418,6 @@ object VersionedTable {
     }
   }
 
-  /** Range-cluster `df` on the table's declared cluster columns. No-op
-    * without the property; a column absent from the frame (pre-schema
-    * tables can append narrower frames) skips clustering rather than
-    * failing the write — the layout is an optimization, never a gate.
-    * No explicit partition count: AQE coalesces the range exchange, so
-    * a small append stages one tight file while a large one fans out
-    * to balanced ranges.
-    */
   /** The table's cluster columns resolved to `df`'s actual column names
     * — Nil when clustering is undeclared or any column is absent (then
     * the layout cannot apply and no sort may be claimed).
@@ -422,7 +428,15 @@ object VersionedTable {
     if (cols.nonEmpty && actual.length == cols.length) actual else Nil
   }
 
-  /** Range-cluster `df` on `cols` (see [[stage]]'s `cluster`); also used
+  /** Range-cluster `df` on the table's declared cluster columns. No-op
+    * without the property; a column absent from the frame (pre-schema
+    * tables can append narrower frames) skips clustering rather than
+    * failing the write — the layout is an optimization, never a gate.
+    * No explicit partition count: AQE coalesces the range exchange, so
+    * a small append stages one tight file while a large one fans out
+    * to balanced ranges.
+    *
+    * Range-cluster `df` on `cols` (see [[stage]]'s `cluster`); also used
     * by the catalog's CTAS/RTAS writes, where the declared layout is
     * known but its property commit necessarily lands AFTER the data.
     */
@@ -476,25 +490,28 @@ object VersionedTable {
     */
   private[sources] val FieldIdKey = "parquet.field.id"
 
-  /** txn watermark + declared-schema + pending-delete lines carried
-    * forward, plus this commit's op marker. `newSchema` (a
+  /** txn watermark + tag + declared-schema + pending-delete lines
+    * carried forward, plus this commit's op marker. `newSchema` (a
     * schema-evolving commit) REPLACES any carried schema line;
     * `dropDeletes` (compaction/overwrite — commits that rewrite or
     * replace every file the deletes could apply to) drops the pending
-    * delete layer.
+    * delete layer; `txn` (an idempotent writer's `(writerId, epoch)`)
+    * advances that writer's watermark.
     */
   private def metaLines(prevRaw: Seq[String], op: String,
       newSchema: Option[org.apache.spark.sql.types.StructType] = None,
       dropDeletes: Boolean = false,
       newProps: Option[Map[String, String]] = None,
-      newFid: Option[Long] = None): Seq[String] =
-    prevRaw.filter(l => l.startsWith(TxnPrefix) ||
+      newFid: Option[Long] = None,
+      txn: Option[(String, Long)] = None): Seq[String] =
+    prevRaw.filter(l => (l.startsWith(TxnPrefix) && txn.isEmpty) ||
         l.startsWith(TagPrefix) ||
         (l.startsWith(SchemaPrefix) && newSchema.isEmpty) ||
         (l.startsWith(PropPrefix) && newProps.isEmpty) ||
         (l.startsWith(FidPrefix) && newFid.isEmpty) ||
         ((l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix)) &&
           !dropDeletes)) ++
+      txn.toSeq.flatMap(w => txnLines(txnMap(prevRaw) + w)) ++
       newSchema.map(s => SchemaPrefix + s.json) ++
       newFid.map(n => FidPrefix + n) ++
       newProps.toSeq.flatMap(propLines) :+ (OpPrefix + op)
@@ -801,7 +818,7 @@ object VersionedTable {
       case Some(x) => (x, readManifestRaw(f, table, x))
       case None => latestRaw(spark, table)
     }
-    (lines.filterNot(_.startsWith("#")),
+    (dataFiles(lines),
       lines.exists(l =>
         l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix)),
       parsedStatsAt(spark, table, Some(v)))
@@ -823,7 +840,7 @@ object VersionedTable {
       case None => latestRaw(spark, table)._2
     }
     bucketSpecOf(lines).filter { case (_, n) =>
-      val files = lines.filterNot(_.startsWith("#"))
+      val files = dataFiles(lines)
       files.nonEmpty &&
         !lines.exists(l =>
           l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix)) &&
@@ -868,7 +885,7 @@ object VersionedTable {
       case Some(x) => readManifestRaw(f, table, x)
       case None => latestRaw(spark, table)._2
     }
-    val files = lines.filterNot(_.startsWith("#"))
+    val files = dataFiles(lines)
     if (files.isEmpty) return none
     val declared = grouped match {
       // the bucketed stage() sorts by the cluster columns when declared,
@@ -944,7 +961,7 @@ object VersionedTable {
     */
   private def reconcileStats(spark: SparkSession, table: String, v: Long,
       lines: Seq[String]): Seq[String] = {
-    val data = lines.filterNot(_.startsWith("#"))
+    val data = dataFiles(lines)
     val base = lines.filterNot(_.startsWith(StatsPrefix))
     if (data.isEmpty) return base
     val given = statsMapOf(lines)
@@ -1052,12 +1069,16 @@ object VersionedTable {
     (v, readManifestRaw(f, table, v))
   }
 
+  /** The data-file lines of a raw manifest (every non-`#` line). */
+  private def dataFiles(lines: Seq[String]): Seq[String] =
+    lines.filterNot(_.startsWith("#"))
+
   /** (version, files) of the latest committed snapshot; (0, Nil) for an
     * empty/new table.
     */
   def latest(spark: SparkSession, table: String): (Long, Seq[String]) = {
     val (v, lines) = latestRaw(spark, table)
-    (v, lines.filterNot(_.startsWith("#")))
+    (v, dataFiles(lines))
   }
 
   /** Highest epoch this writer has committed, or None. The streaming
@@ -1081,7 +1102,7 @@ object VersionedTable {
       (Set.empty[String], List.empty[(Long, Option[String], Int, Int, Map[String, Long])])) {
       case ((prev, acc), v) =>
         val raw = readManifestRaw(f, table, v)
-        val cur = raw.filterNot(_.startsWith("#")).toSet
+        val cur = dataFiles(raw).toSet
         val op = raw.collectFirst {
           case l if l.startsWith(OpPrefix) => l.drop(OpPrefix.length)
         }
@@ -1119,27 +1140,24 @@ object VersionedTable {
     * line format is `#prop <key> <rest-of-line value>`.
     */
   def alterProperties(spark: SparkSession, table: String,
-      set: Map[String, String], unset: Seq[String] = Nil,
-      maxRetries: Int = 20): Long = {
+      set: Map[String, String], unset: Seq[String] = Nil): Long = {
     require(set.nonEmpty || unset.nonEmpty, "nothing to change")
     (set.keys ++ unset).foreach(k => require(
       k.nonEmpty && !k.exists(_.isWhitespace),
       s"property key '$k' must be non-empty and space-free"))
     set.values.foreach(v => require(!v.contains("\n"),
       "property values must be single-line"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    commitLoop(spark, table, "alterProperties") { (_, lines) =>
       if (set.get(CdcProperty).exists(_.trim.equalsIgnoreCase("true")))
         // tables born via plain append have no declared schema line —
         // one footer read of a data file stands in (enable-time only)
         requireNoReservedCdfColumns(schemaLine(lines).orElse(
-          lines.filterNot(_.startsWith("#")).headOption.map(f =>
+          dataFiles(lines).headOption.map(f =>
             spark.read.parquet(s"$table/$f").schema)),
           s"enable $CdcProperty on $table")
       set.get(ClusterByProperty).foreach(spec =>
         validateClusterSpec(spec, schemaLine(lines).orElse(
-          lines.filterNot(_.startsWith("#")).headOption.map(f =>
+          dataFiles(lines).headOption.map(f =>
             spark.read.parquet(s"$table/$f").schema)), table))
       // bucketing is SET-ONCE (see BucketByProperty): a different spec
       // would silently re-interpret existing files' bucket names
@@ -1153,7 +1171,7 @@ object VersionedTable {
             "bucket layout is fixed at declaration")
         val (c, _) = parseBucketSpec(spec).get
         validateClusterSpec(c, schemaLine(lines).orElse(
-          lines.filterNot(_.startsWith("#")).headOption.map(f =>
+          dataFiles(lines).headOption.map(f =>
             spark.read.parquet(s"$table/$f").schema)), table,
           prop = BucketByProperty)
       }
@@ -1162,7 +1180,7 @@ object VersionedTable {
           "at declaration")
       set.filter(_._1.startsWith(ConstraintPrefix)).foreach {
         case (k, sql) =>
-          val files = lines.filterNot(_.startsWith("#"))
+          val files = dataFiles(lines)
           validateConstraint(spark, k.stripPrefix(ConstraintPrefix), sql,
             schemaLine(lines).orElse(files.headOption.map(f =>
               spark.read.parquet(s"$table/$f").schema)),
@@ -1173,13 +1191,9 @@ object VersionedTable {
             table)
       }
       val next = (propMap(lines) ++ set) -- unset
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "properties", newProps = Some(next)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      commit(metaLines(lines, "properties", newProps = Some(next)) ++
+        dataFiles(lines))
     }
-    throw new IllegalStateException(
-      s"alterProperties lost $maxRetries commit races")
   }
 
   /** Create an empty table with a declared schema: commit v1 with no
@@ -1214,17 +1228,14 @@ object VersionedTable {
     * evolution has a base to widen.
     */
   def addColumns(spark: SparkSession, table: String,
-      newCols: Seq[org.apache.spark.sql.types.StructField],
-      maxRetries: Int = 20): Long = {
+      newCols: Seq[org.apache.spark.sql.types.StructField]): Long = {
     require(newCols.nonEmpty, "addColumns needs at least one column")
     newCols.foreach(f => require(f.nullable,
       s"new column ${f.name} must be nullable: rows written before this " +
         "commit have no value for it"))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    commitLoop(spark, table, "addColumns") { (_, lines) =>
       val base = schemaLine(lines).getOrElse {
-        val files = lines.filterNot(_.startsWith("#"))
+        val files = dataFiles(lines)
         require(files.nonEmpty,
           s"$table has no declared schema and no data files to infer one")
         spark.read.parquet(s"$table/${files.head}").schema
@@ -1242,12 +1253,9 @@ object VersionedTable {
       val (idNew, fid) = assignIds(newCols, math.max(fidOf(lines),
         maxFieldId(base)))
       val widened = org.apache.spark.sql.types.StructType(base.fields ++ idNew)
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(widened), newFid = Some(fid)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      commit(metaLines(lines, "schema", Some(widened), newFid = Some(fid)) ++
+        dataFiles(lines))
     }
-    throw new IllegalStateException(s"addColumns lost $maxRetries commit races")
   }
 
   /** Record `schema` as the declared schema of an EXISTING table that
@@ -1258,24 +1266,15 @@ object VersionedTable {
     * (the catalog) guarantee it — it IS the schema the write ran under.
     */
   private[graft] def declareSchema(spark: SparkSession, table: String,
-      schema: org.apache.spark.sql.types.StructType,
-      maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      if (schemaLine(lines).isDefined) return v
+      schema: org.apache.spark.sql.types.StructType): Long =
+    commitLoop(spark, table, "declareSchema") { (v, lines) =>
+      if (schemaLine(lines).isDefined) Done(v)
       // NO field ids here: the staged CTAS data was already written
       // under the id-less schema, and stamping ids now would make the
       // id-matching read miss every column of those files. The table
       // stays name-matched until [[materializeFieldIds]] upgrades it.
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(schema)) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      attempt += 1
+      else commit(metaLines(lines, "schema", Some(schema)) ++ dataFiles(lines))
     }
-    throw new IllegalStateException(
-      s"declareSchema lost $maxRetries commit races")
-  }
 
   /** Align `df` to the table's declared schema for a write, by NAME
     * (order-insensitive, case-insensitive like Spark's resolver):
@@ -1371,7 +1370,6 @@ object VersionedTable {
       v -> f.getFileStatus(commitPath(table, v)).getModificationTime)
   }
 
-  /** All committed versions, ascending; empty for a new table. */
   /** Op markers of the retained commits in `(fromVersion, toVersion]` —
     * manifest metadata only, no data files touched. Lets an incremental
     * consumer decide from the LOG whether a CDF window can contain
@@ -1408,6 +1406,7 @@ object VersionedTable {
       .forall(_.exists(safe.contains))
   }
 
+  /** All committed versions, ascending; empty for a new table. */
   def versions(spark: SparkSession, table: String): Seq[Long] = {
     val f = fs(spark, table)
     val dir = new Path(s"$table/$CommitsDir")
@@ -1437,11 +1436,11 @@ object VersionedTable {
     // atomic rename need an external CAS — same requirement as Delta.
     val tmp = new Path(s"$table/$CommitsDir/.tmp-${java.util.UUID.randomUUID}")
     val dst = commitPath(table, v)
-    try {
-      val out = f.create(tmp, false)
-      try out.write((files.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-      val won =
+    val won =
+      try {
+        val out = f.create(tmp, false)
+        try out.write((files.mkString("\n") + "\n").getBytes("UTF-8"))
+        finally out.close()
         if (f.getUri.getScheme == "file") {
           try {
             java.nio.file.Files.createLink(
@@ -1463,15 +1462,110 @@ object VersionedTable {
               s"link; filesystem scheme '${f.getUri.getScheme}' has " +
               "neither — configure an external commit coordinator")
         }
-      if (f.exists(tmp) && (!won || f.getUri.getScheme == "file"))
-        f.delete(tmp, false)
-      won
-    } catch {
-      case _: java.io.IOException => f.delete(tmp, false); false
+      } catch { case _: java.io.IOException => false }
+    // the outcome is decided above; the temp file is garbage either way,
+    // and a failure removing it must never report a published version as
+    // lost (the caller would retry on top of its own commit)
+    try if (f.exists(tmp)) f.delete(tmp, false)
+    catch { case _: java.io.IOException => () }
+    won
+  }
+
+  /** Retry budget of [[commitLoop]]: a writer that loses this many races
+    * in a row gives up (the caller backs off and retries).
+    */
+  private val MaxCommitRetries = 20
+
+  /** One attempt's verdict in [[commitLoop]]. */
+  private sealed trait Attempt
+  /** Finish without committing — a no-op, a replayed epoch, nothing
+    * matched — returning `version`.
+    */
+  private final case class Done(version: Long) extends Attempt
+  /** Publish what `next` builds from the `(version, raw lines)` it is
+    * handed, or retry when it reports a conflict (None). `staged` are
+    * the files this attempt wrote. With `raceWindow` the loop fires
+    * [[commitRaceHook]] and hands `next` the re-read latest commit;
+    * otherwise the attempt's own pinned snapshot.
+    */
+  private final case class Commit(staged: Seq[String], raceWindow: Boolean,
+      next: (Long, Seq[String]) => Option[Seq[String]]) extends Attempt
+
+  /** Commit `lines` over the attempt's pinned snapshot. */
+  private def commit(lines: Seq[String], staged: Seq[String] = Nil): Attempt =
+    Commit(staged, raceWindow = false, (_, _) => Some(lines))
+
+  /** Rebase onto whatever committed since the attempt's snapshot read:
+    * `next` applies the op's conflict rule to the latest commit.
+    */
+  private def rebase(staged: Seq[String])(
+      next: (Long, Seq[String]) => Option[Seq[String]]): Attempt =
+    Commit(staged, raceWindow = true, next)
+
+  /** THE optimistic-concurrency commit loop every writer goes through
+    * (see the object doc's Protocol). Each attempt reads the latest
+    * `(version, raw lines)` and decides: [[Done]], or a [[Commit]]
+    * published through [[tryCommit]] at the next version. A lost race
+    * deletes that attempt's staged files and retries; after
+    * [[MaxCommitRetries]] losses it throws `"<op> lost N commit races"`.
+    * Whenever the loop ends without a won commit — early result, give-up
+    * or any exception — it also deletes `preStaged`, the files the op
+    * wrote before the loop, unless `keepPreStaged` (a WAP publish, whose
+    * files an earlier commit may already reference).
+    */
+  private def commitLoop(spark: SparkSession, table: String, op: String,
+      preStaged: Seq[String] = Nil, keepPreStaged: Boolean = false)(
+      attempt: (Long, Seq[String]) => Attempt): Long = {
+    lazy val f = fs(spark, table)
+    def drop(names: Seq[String]): Unit =
+      names.foreach(n => f.delete(new Path(table, n), false))
+    var staged: Seq[String] = Nil
+    var won = false
+    try {
+      var tries = 0
+      while (tries < MaxCommitRetries) {
+        val (v, lines) = latestRaw(spark, table)
+        attempt(v, lines) match {
+          case Done(r) => return r
+          case Commit(s, raceWindow, next) =>
+            staged = s
+            val (v2, lines2) =
+              if (!raceWindow) (v, lines)
+              else { commitRaceHook(); latestRaw(spark, table) }
+            if (next(v2, lines2).exists(tryCommit(spark, table, v2 + 1, _))) {
+              won = true
+              return v2 + 1
+            }
+            drop(staged)
+            staged = Nil
+        }
+        tries += 1
+      }
+      throw new IllegalStateException(
+        s"$op lost $MaxCommitRetries commit races")
+    } finally if (!won) {
+      drop(staged)
+      if (!keepPreStaged) drop(preStaged)
     }
   }
 
-  /** Stage `df` as new data files and return their table-relative names. */
+  /** The strict rewrite conflict rule: the data-file set and the pending
+    * delete layer are both unchanged. A raced delete-LAYER commit
+    * changes no data file, but rewritten files would escape it (fresh
+    * names, higher file version), so it conflicts like a raced file.
+    */
+  private def sameSnapshot(a: Seq[String], b: Seq[String]): Boolean =
+    dataFiles(a).toSet == dataFiles(b).toSet && deleteLayer(a) == deleteLayer(b)
+
+  /** Whether `lines` already record `txn`'s epoch (a replay). */
+  private def replayed(lines: Seq[String],
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (w, e) => txnMap(lines).get(w).exists(_ >= e) }
+
+  private def requireWriterId(w: String): Unit =
+    require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
+      "writerId must be non-empty, no spaces")
+
   /** Spark's written part-file names carry the task partition index
     * (`part-00007-<uuid>...`); after `repartition(n, col)` that index
     * IS the bucket id. None = unexpected name shape (stage falls back
@@ -1483,6 +1577,7 @@ object VersionedTable {
     case _ => None
   }
 
+  /** Stage `df` as new data files and return their table-relative names. */
   private def stage(spark: SparkSession, df00: DataFrame,
       table: String, prefix: String = "part-",
       cluster: Boolean = false, sortedBy: Seq[String] = Nil,
@@ -1636,8 +1731,7 @@ object VersionedTable {
     * concurrently evolved schema so no writer's columns are lost).
     */
   def append(spark: SparkSession, df: DataFrame, table: String,
-      maxRetries: Int = 20, evolveSchema: Boolean = false,
-      sortedBy: Seq[String] = Nil): Long = {
+      evolveSchema: Boolean = false, sortedBy: Seq[String] = Nil): Long = {
     val lines0 = latestRaw(spark, table)._2
     val (aligned, extras) = schemaLine(lines0) match {
       case Some(sc) => alignToSchema(df, sc, evolveSchema, table)
@@ -1645,21 +1739,12 @@ object VersionedTable {
     }
     val staged = stage(spark, aligned, table, cluster = true,
       sortedBy = sortedBy)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    commitLoop(spark, table, "append", preStaged = staged) { (_, lines) =>
       // writer txn watermarks carry forward; op marker is per-commit
       val newSchema = schemaLine(lines).flatMap(widen(_, extras))
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "append", newSchema) ++
-          lines.filterNot(_.startsWith("#")) ++ staged)) return v + 1
-      attempt += 1
+      commit(metaLines(lines, "append", newSchema) ++ dataFiles(lines) ++
+        staged)
     }
-    // never committed: remove the staged files so they don't sit orphaned
-    // in the table dir until a vacuum
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(s"append lost $maxRetries commit races")
   }
 
   /** Exactly-once append for streaming micro-batches: the commit records
@@ -1674,39 +1759,12 @@ object VersionedTable {
     * query racing the same batch commit it exactly once.
     */
   def appendIdempotent(spark: SparkSession, df: DataFrame, table: String,
-      writerId: String, epoch: Long, maxRetries: Int = 20): Long = {
-    require(writerId.nonEmpty && !writerId.contains(" ") &&
-      !writerId.contains("\n"), "writerId must be non-empty, no spaces")
+      writerId: String, epoch: Long): Long = {
+    requireWriterId(writerId)
     val (v0, lines0) = latestRaw(spark, table)
-    if (txnMap(lines0).get(writerId).exists(_ >= epoch)) return v0
-    val aligned = schemaLine(lines0) match {
-      case Some(sc) => alignToSchema(df, sc, evolve = false, table)._1
-      case None => df
-    }
-    val staged = stage(spark, aligned, table, cluster = true)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val txns = txnMap(lines)
-      if (txns.get(writerId).exists(_ >= epoch)) {
-        // a racing instance of this writer committed our epoch first —
-        // drop our staged files; the batch is already in the table
-        val f = fs(spark, table)
-        staged.foreach(n => f.delete(new Path(table, n), false))
-        return v
-      }
-      val next = lines.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-        l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-        l.startsWith(PropPrefix)) ++
-        txnLines(txns + (writerId -> epoch)) :+ (OpPrefix + "append")
-      val nextAll = next ++ lines.filterNot(_.startsWith("#")) ++ staged
-      if (tryCommit(spark, table, v + 1, nextAll)) return v + 1
-      attempt += 1
-    }
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"appendIdempotent lost $maxRetries commit races")
+    if (replayed(lines0, Some(writerId -> epoch))) v0
+    else commitStagedIdempotent(spark, table,
+      stageAligned(spark, df, table, lines0), writerId, epoch)
   }
 
   /** Stage `df` into the table dir (aligned to the declared schema,
@@ -1716,9 +1774,13 @@ object VersionedTable {
     * references them.
     */
   private[sources] def stageAligned(spark: SparkSession, df: DataFrame,
-      table: String): Seq[String] = {
-    val lines0 = latestRaw(spark, table)._2
-    val aligned = schemaLine(lines0) match {
+      table: String): Seq[String] =
+    stageAligned(spark, df, table, latestRaw(spark, table)._2)
+
+  /** [[stageAligned]] against the already-read manifest `lines`. */
+  private def stageAligned(spark: SparkSession, df: DataFrame,
+      table: String, lines: Seq[String]): Seq[String] = {
+    val aligned = schemaLine(lines) match {
       case Some(sc) => alignToSchema(df, sc, evolve = false, table)._1
       case None => df
     }
@@ -1732,9 +1794,9 @@ object VersionedTable {
     * sink, same contract as [[appendIdempotent]].
     *
     * `requireVersion` makes the commit STRICT: if the table's latest
-    * version is no longer the expected one, throw WITHOUT deleting the
-    * staged files — the caller (WAP publish) keeps its session open to
-    * rebase or abort.
+    * version is no longer the expected one, throw — with
+    * `deleteOnDuplicate = false` WITHOUT deleting the staged files, so
+    * the caller (WAP publish) keeps its session open to rebase or abort.
     *
     * `deleteOnDuplicate` separates the two retry contracts. The
     * streaming sink re-STAGES fresh duplicate files on retry, so the
@@ -1743,41 +1805,30 @@ object VersionedTable {
     * already reference — deleting them would corrupt the committed
     * manifest (silent data loss), so Wap.publish passes false: on a
     * duplicate the files are left alone (they are committed data), and
-    * on a lost-races failure they also survive so the still-open
-    * session marker never lists deleted files.
+    * on a lost-races failure or any other throw they also survive so
+    * the still-open session marker never lists deleted files. With
+    * true, every exit short of a won commit deletes them.
     */
   private[sources] def commitStagedIdempotent(spark: SparkSession,
       table: String, files: Seq[String], writerId: String, epoch: Long,
-      maxRetries: Int = 20, requireVersion: Option[Long] = None,
+      requireVersion: Option[Long] = None,
       deleteOnDuplicate: Boolean = true): Long = {
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val txns = txnMap(lines)
-      if (txns.get(writerId).exists(_ >= epoch)) {
-        if (deleteOnDuplicate)
-          files.foreach(n => f.delete(new Path(table, n), false))
-        return v
+    val txn = Some(writerId -> epoch)
+    commitLoop(spark, table, "appendIdempotent", preStaged = files,
+        keepPreStaged = !deleteOnDuplicate) { (v, lines) =>
+      // a racing instance of this writer committed our epoch first: the
+      // batch is already in the table
+      if (replayed(lines, txn)) Done(v)
+      else {
+        requireVersion.filter(_ != v).foreach { expect =>
+          throw new IllegalStateException(
+            s"strict publish on $table expected base version $expect " +
+              s"but found $v (concurrent commit); session left open")
+        }
+        commit(metaLines(lines, "append", txn = txn) ++ dataFiles(lines) ++
+          files)
       }
-      requireVersion.filter(_ != v).foreach { expect =>
-        throw new IllegalStateException(
-          s"strict publish on $table expected base version $expect " +
-            s"but found $v (concurrent commit); session left open")
-      }
-      val next = lines.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-        l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-        l.startsWith(PropPrefix)) ++
-        txnLines(txns + (writerId -> epoch)) :+ (OpPrefix + "append")
-      if (tryCommit(spark, table, v + 1,
-          next ++ lines.filterNot(_.startsWith("#")) ++ files))
-        return v + 1
-      attempt += 1
     }
-    if (deleteOnDuplicate)
-      files.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"streaming epoch commit lost $maxRetries races")
   }
 
   /** Snapshot read of the latest committed version. Pass `schema` so an
@@ -1788,7 +1839,7 @@ object VersionedTable {
   def read(spark: SparkSession, table: String,
       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
     val (_, lines) = latestRaw(spark, table)
-    readFilesDeleteAware(spark, table, lines.filterNot(_.startsWith("#")),
+    readFilesDeleteAware(spark, table, dataFiles(lines),
       schema.orElse(schemaLine(lines)), delLines(lines),
       keepFileCol = false, posDels = delPosLines(lines))
   }
@@ -1808,30 +1859,11 @@ object VersionedTable {
     // travel to before an ADD COLUMN does not show the later column, and
     // only the delete layer pending AT that version applies
     val raw = readManifestRaw(f, table, version)
-    readFilesDeleteAware(spark, table, raw.filterNot(_.startsWith("#")),
+    readFilesDeleteAware(spark, table, dataFiles(raw),
       schemaLine(raw), delLines(raw), keepFileCol = false,
       posDels = delPosLines(raw))
   }
 
-  /** Incremental changefeed: the rows ADDED by commits in
-    * `(fromVersion, toVersion]`, each tagged with the `_commit_version`
-    * that introduced it — the consumption primitive pairing with the
-    * exactly-once streaming sink (write micro-batches in, tail new rows
-    * out, both against manifest versions). A downstream job that
-    * checkpoints the last version it processed reads exactly the new
-    * data per tick, never rescanning the table — at 100 TB the
-    * incremental read costs what the increment costs.
-    *
-    * Commit classification is structural: in this protocol a commit
-    * either only adds files (append — its added files ARE the change) or
-    * replaces files (compaction — a pure rewrite, NO data change; its
-    * outputs are skipped). Appends that race a compaction land in their
-    * own later commits, so the dichotomy is total.
-    *
-    * Like Delta's change feed, this needs the manifests in the range to
-    * still exist: vacuum retention must cover consumer lag, else this
-    * throws (never silently returns partial changes).
-    */
   /** Table-relative files ADDED by each append commit in
     * `(fromVersion, min(toVersion, latest)]` — the manifest-diff core
     * shared by [[readChanges]] and the streaming source. Commits with
@@ -1855,7 +1887,7 @@ object VersionedTable {
       need.map(v => v -> readManifestRaw(f, table, v)).toMap + (0L -> Seq.empty)
     need.filter(_ > fromVersion).flatMap { v =>
       val raw = manifests(v)
-      val cur = raw.filterNot(_.startsWith("#"))
+      val cur = dataFiles(raw)
       val prev = manifests(v - 1).filterNot(_.startsWith("#")).toSet
       val removed = prev -- cur
       // a merge-on-read delete is STRUCTURALLY empty (no data file added
@@ -1916,6 +1948,25 @@ object VersionedTable {
     out.toMap
   }
 
+  /** Incremental changefeed: the rows ADDED by commits in
+    * `(fromVersion, toVersion]`, each tagged with the `_commit_version`
+    * that introduced it — the consumption primitive pairing with the
+    * exactly-once streaming sink (write micro-batches in, tail new rows
+    * out, both against manifest versions). A downstream job that
+    * checkpoints the last version it processed reads exactly the new
+    * data per tick, never rescanning the table — at 100 TB the
+    * incremental read costs what the increment costs.
+    *
+    * Commit classification is structural: in this protocol a commit
+    * either only adds files (append — its added files ARE the change) or
+    * replaces files (compaction — a pure rewrite, NO data change; its
+    * outputs are skipped). Appends that race a compaction land in their
+    * own later commits, so the dichotomy is total.
+    *
+    * Like Delta's change feed, this needs the manifests in the range to
+    * still exist: vacuum retention must cover consumer lag, else this
+    * throws (never silently returns partial changes).
+    */
   def readChanges(spark: SparkSession, table: String, fromVersion: Long,
       toVersion: Long = Long.MaxValue,
       schema: Option[org.apache.spark.sql.types.StructType] = None,
@@ -1978,8 +2029,8 @@ object VersionedTable {
     need.filter(_ > fromVersion).flatMap { v =>
       val raw = raws(v)
       val prevRaw = raws(v - 1)
-      val cur = raw.filterNot(_.startsWith("#"))
-      val prev = prevRaw.filterNot(_.startsWith("#")).toSet
+      val cur = dataFiles(raw)
+      val prev = dataFiles(prevRaw).toSet
       val removed = prev -- cur
       val added = cur.filterNot(prev)
       val op = raw.collectFirst {
@@ -2056,8 +2107,8 @@ object VersionedTable {
     val parts = need.filter(_ > fromVersion).flatMap { v =>
       val raw = raws(v)
       val prevRaw = raws(v - 1)
-      val cur = raw.filterNot(_.startsWith("#"))
-      val prev = prevRaw.filterNot(_.startsWith("#"))
+      val cur = dataFiles(raw)
+      val prev = dataFiles(prevRaw)
       val removed = prev.filterNot(cur.contains)
       val added = cur.filterNot(prev.contains)
       val op = raw.collectFirst {
@@ -2170,6 +2221,14 @@ object VersionedTable {
       files: Seq[String], lines: Seq[String]): DataFrame =
     readFilesDeleteAware(spark, table, files, schemaLine(lines),
       delLines(lines), keepFileCol = true, posDels = delPosLines(lines))
+
+  /** The `__vt_file`s of `snap` ([[snapReadWithFile]]) holding a row
+    * where `predicate` is TRUE — one pushed-down scan.
+    */
+  private def filesWhere(snap: DataFrame,
+      predicate: org.apache.spark.sql.Column): Seq[String] =
+    snap.where(predicate).select("__vt_file").distinct().collect()
+      .map(_.getString(0)).toSeq
 
   /** [[snapReadWithFile]] plus `__vt_pos` (the row's physical index in
     * its file) — the provenance [[deleteWhereMergeOnRead]] stages.
@@ -2324,24 +2383,6 @@ object VersionedTable {
     }
   }
 
-  /** Compact the current snapshot into `numFiles` files. The commit
-    * REPLACES exactly the input snapshot's files; appends that raced in
-    * between are rebased over on retry — never lost, never duplicated.
-    * Returns the committed version (or -1 if the table was empty).
-    * Also MATERIALIZES any pending merge-on-read delete layer: the
-    * rewrite reads through the anti-join, so the compacted files
-    * physically lack the deleted rows and the `#del` lines drop from
-    * the manifest (read overhead back to zero).
-    *
-    * `zorderDims` (+ `zorderBits`) optionally re-CLUSTERS while
-    * compacting: rows are range-partitioned and sorted on the Morton
-    * interleave of the given integral bucket columns (see
-    * [[graft.functions.GraftFunctions.ZValue]]), so the compacted files
-    * carry tight parquet min/max ranges in every clustered dimension —
-    * compaction is exactly when a versioned lake re-sorts for data
-    * skipping (Delta OPTIMIZE ZORDER BY's shape), and the OCC commit
-    * protocol is unchanged.
-    */
   /** Byte-targeted compaction — at 100 TB you size output FILES, not
     * their count: numFiles = ceil(snapshot bytes / target). The output
     * size is an estimate by input bytes (the Delta OPTIMIZE heuristic:
@@ -2351,14 +2392,14 @@ object VersionedTable {
     * belongs to compact().
     */
   def compactToSize(spark: SparkSession, table: String,
-      targetFileSizeBytes: Long, maxRetries: Int = 20,
+      targetFileSizeBytes: Long,
       zorderDims: Seq[org.apache.spark.sql.Column] = Nil,
       zorderBits: Int = 16): Long = {
     require(targetFileSizeBytes > 0,
       s"target file size must be positive, got $targetFileSizeBytes")
     val f = fs(spark, table)
     val (_, lines) = latestRaw(spark, table)
-    val files = lines.filterNot(_.startsWith("#"))
+    val files = dataFiles(lines)
     if (files.isEmpty) return -1L
     // sizes come from the manifest's #stats lines already in hand — at
     // a 100k-file snapshot, per-file getFileStatus RPCs would cost
@@ -2377,11 +2418,28 @@ object VersionedTable {
     val n = math.min(
       math.max(1L, (total + targetFileSizeBytes - 1) / targetFileSizeBytes),
       Int.MaxValue.toLong).toInt
-    compact(spark, table, n, maxRetries, zorderDims, zorderBits)
+    compact(spark, table, n, zorderDims, zorderBits)
   }
 
+  /** Compact the current snapshot into `numFiles` files. The commit
+    * REPLACES exactly the input snapshot's files; appends that raced in
+    * between are rebased over on retry — never lost, never duplicated.
+    * Returns the committed version (or -1 if the table was empty).
+    * Also MATERIALIZES any pending merge-on-read delete layer: the
+    * rewrite reads through the anti-join, so the compacted files
+    * physically lack the deleted rows and the `#del` lines drop from
+    * the manifest (read overhead back to zero).
+    *
+    * `zorderDims` (+ `zorderBits`) optionally re-CLUSTERS while
+    * compacting: rows are range-partitioned and sorted on the Morton
+    * interleave of the given integral bucket columns (see
+    * [[graft.functions.GraftFunctions.ZValue]]), so the compacted files
+    * carry tight parquet min/max ranges in every clustered dimension —
+    * compaction is exactly when a versioned lake re-sorts for data
+    * skipping (Delta OPTIMIZE ZORDER BY's shape), and the OCC commit
+    * protocol is unchanged.
+    */
   def compact(spark: SparkSession, table: String, numFiles: Int,
-      maxRetries: Int = 20,
       zorderDims: Seq[org.apache.spark.sql.Column] = Nil,
       zorderBits: Int = 16,
       curve: String = "zorder"): Long = {
@@ -2389,69 +2447,61 @@ object VersionedTable {
       s"curve must be 'zorder' or 'hilbert', got '$curve'")
     require(curve != "hilbert" || zorderDims.size == 2,
       s"the hilbert curve is 2-D: pass exactly 2 dims, got ${zorderDims.size}")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (_, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) return -1L
-      val snapshot = snapRead(spark, table, files, lines)
-      val clusterCols = clusterColsOf(lines)
-      val rangeSorted = zorderDims.isEmpty && clusterCols.nonEmpty
-      val clustered =
-        if (rangeSorted) {
-          // no explicit dims on a clustered table: compaction preserves
-          // the write-time range layout instead of destroying it with a
-          // round-robin repartition
-          val cs = clusterCols.map(org.apache.spark.sql.functions.col)
-          snapshot.repartitionByRange(numFiles, cs: _*)
-            .sortWithinPartitions(cs: _*)
-        }
-        else if (zorderDims.isEmpty) snapshot.repartition(numFiles)
-        else {
-          // hilbert: unit-step locality — a file's key range is a compact
-          // blob, so min/max pruning on BOTH dims beats z-order's
-          // quadrant jumps for the same rewrite cost
-          val z =
-            if (curve == "hilbert") graft.functions.GraftFunctions
-              .hilbert(zorderBits)(zorderDims(0), zorderDims(1))
-            else graft.functions.GraftFunctions
-              .zvalue(zorderBits)(zorderDims: _*)
-          snapshot.withColumn("__graft_z", z)
-            .repartitionByRange(numFiles,
-              org.apache.spark.sql.functions.col("__graft_z"))
-            .sortWithinPartitions("__graft_z")
-            .drop("__graft_z")
-        }
-      val compacted = stage(spark,
-        stampFieldIds(clustered, schemaLine(lines)), table,
-        // z-order interleaving is NOT a lexicographic sort — only the
-        // preserved range layout may claim the sorted-file marker
-        sortedBy = if (rangeSorted) clusterCols else Nil)
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      // valid only while EVERY input file is still live (another
-      // compactor replacing them would make our commit duplicate rows)
-      // AND the pending delete layer is unchanged — a deleteByKeys/
-      // deleteWhereMergeOnRead that raced in adds NO data file, so the
-      // file check alone would pass and dropDeletes would then discard
-      // a layer this rewrite never applied (permanent data loss).
-      // Concurrent APPENDS are rebased over (kept alongside). Writer txn
-      // watermarks carry forward — a compaction must not make a streaming
-      // writer forget its committed epochs (that would re-admit replays).
-      val committed =
-        files.forall(files2.contains) &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
+    commitLoop(spark, table, "compact") { (_, lines) =>
+      val files = dataFiles(lines)
+      if (files.isEmpty) Done(-1L)
+      else {
+        val snapshot = snapRead(spark, table, files, lines)
+        val clusterCols = clusterColsOf(lines)
+        val rangeSorted = zorderDims.isEmpty && clusterCols.nonEmpty
+        val clustered =
+          if (rangeSorted) {
+            // no explicit dims on a clustered table: compaction preserves
+            // the write-time range layout instead of destroying it with a
+            // round-robin repartition
+            val cs = clusterCols.map(org.apache.spark.sql.functions.col)
+            snapshot.repartitionByRange(numFiles, cs: _*)
+              .sortWithinPartitions(cs: _*)
+          }
+          else if (zorderDims.isEmpty) snapshot.repartition(numFiles)
+          else {
+            // hilbert: unit-step locality — a file's key range is a compact
+            // blob, so min/max pruning on BOTH dims beats z-order's
+            // quadrant jumps for the same rewrite cost
+            val z =
+              if (curve == "hilbert") graft.functions.GraftFunctions
+                .hilbert(zorderBits)(zorderDims(0), zorderDims(1))
+              else graft.functions.GraftFunctions
+                .zvalue(zorderBits)(zorderDims: _*)
+            snapshot.withColumn("__graft_z", z)
+              .repartitionByRange(numFiles,
+                org.apache.spark.sql.functions.col("__graft_z"))
+              .sortWithinPartitions("__graft_z")
+              .drop("__graft_z")
+          }
+        val compacted = stage(spark,
+          stampFieldIds(clustered, schemaLine(lines)), table,
+          // z-order interleaving is NOT a lexicographic sort — only the
+          // preserved range layout may claim the sorted-file marker
+          sortedBy = if (rangeSorted) clusterCols else Nil)
+        rebase(compacted) { (_, lines2) =>
+          val files2 = dataFiles(lines2)
+          // valid only while EVERY input file is still live (another
+          // compactor replacing them would make our commit duplicate rows)
+          // AND the pending delete layer is unchanged — a deleteByKeys/
+          // deleteWhereMergeOnRead that raced in adds NO data file, so the
+          // file check alone would pass and dropDeletes would then discard
+          // a layer this rewrite never applied (permanent data loss).
+          // Concurrent APPENDS are rebased over (kept alongside). Writer txn
+          // watermarks carry forward — a compaction must not make a streaming
+          // writer forget its committed epochs (that would re-admit replays).
+          Option.when(files.forall(files2.contains) &&
+              deleteLayer(lines2) == deleteLayer(lines))(
             metaLines(lines2, "compact", dropDeletes = true) ++
               compacted ++ files2.filterNot(files.contains))
-      if (committed) return v2 + 1
-      // lost the race — drop our staged output and retry from scratch
-      val f = fs(spark, table)
-      compacted.foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+        }
+      }
     }
-    throw new IllegalStateException(s"compact lost $maxRetries commit races")
   }
 
   // ---------- row-level operations (copy-on-write) ----------
@@ -2585,65 +2635,47 @@ object VersionedTable {
     */
   private[sources] def commitReplaceFiles(spark: SparkSession, table: String,
       expectedSnapshot: Seq[String], remove: Seq[String], add: Seq[String],
-      op: String, maxRetries: Int = 20,
-      expectedLayer: Option[Set[String]] = None): Long = {
-    var attempt = 0
-    var cdcFiles: Seq[String] = Nil
-    var cdcStaged = false
-    try {
-      while (attempt < maxRetries) {
-        val (v, lines) = latestRaw(spark, table)
-        val files = lines.filterNot(_.startsWith("#"))
-        // a raced delete-LAYER commit changes no data file but the
-        // replacement files would escape it (fresh names/higher version),
-        // so it conflicts exactly like a moved snapshot
-        if (files.toSet != expectedSnapshot.toSet ||
-            expectedLayer.exists(_ != deleteLayer(lines)))
-          throw new java.util.ConcurrentModificationException(
-            s"$op of $table: snapshot changed since the statement's scan — " +
-              "re-run the statement")
-        if (!cdcStaged && (remove.nonEmpty || add.nonEmpty)) {
-          cdcStaged = true
-          // SQL rewrites only hand over final rows — derive this
-          // commit's changes from its touched files (EXCEPT ALL under
-          // the pinned layers), labeled by op like readChangesCDF
-          cdcFiles = stageCdcIfEnabled(spark, table, lines, {
-            import org.apache.spark.sql.functions.lit
-            val declared = schemaLine(lines)
-            val pre = readFilesDeleteAware(spark, table, remove, declared,
-              delLines(lines), keepFileCol = false,
-              posDels = delPosLines(lines))
-            val post = readFiles(spark, table, add, declared)
-            val preD = pre.exceptAll(post)
-            val postD = post.exceptAll(pre)
-            op match {
-              case "update" =>
-                preD.withColumn(ChangeTypeCol, lit("update_preimage"))
-                  .unionByName(postD.withColumn(ChangeTypeCol,
-                    lit("update_postimage")))
-              case "delete" =>
-                preD.withColumn(ChangeTypeCol, lit("delete"))
-              case _ =>
-                preD.withColumn(ChangeTypeCol, lit("delete"))
-                  .unionByName(postD.withColumn(ChangeTypeCol,
-                    lit("insert")))
-            }
-          })
-        }
-        if (tryCommit(spark, table, v + 1,
-            metaLines(lines, op) ++ cdcFiles.map(CdcPrefix + _) ++
-              files.filterNot(remove.contains) ++ add)) return v + 1
-        attempt += 1
-      }
-      throw new IllegalStateException(
-        s"$op lost $maxRetries commit races for $table")
-    } catch {
-      case e: Throwable =>
-        val f = fs(spark, table)
-        cdcFiles.foreach(n => f.delete(new Path(table, n), false))
-        throw e
+      op: String, expectedLayer: Option[Set[String]] = None): Long =
+    commitLoop(spark, table, op) { (_, lines) =>
+      val files = dataFiles(lines)
+      // a raced delete-LAYER commit changes no data file but the
+      // replacement files would escape it (fresh names/higher version),
+      // so it conflicts exactly like a moved snapshot
+      if (files.toSet != expectedSnapshot.toSet ||
+          expectedLayer.exists(_ != deleteLayer(lines)))
+        throw new java.util.ConcurrentModificationException(
+          s"$op of $table: snapshot changed since the statement's scan — " +
+            "re-run the statement")
+      // SQL rewrites only hand over final rows — derive this commit's
+      // changes from its touched files (EXCEPT ALL under the pinned
+      // layers), labeled by op like readChangesCDF
+      val cdc =
+        if (remove.isEmpty && add.isEmpty) Nil
+        else stageCdcIfEnabled(spark, table, lines, {
+          import org.apache.spark.sql.functions.lit
+          val declared = schemaLine(lines)
+          val pre = readFilesDeleteAware(spark, table, remove, declared,
+            delLines(lines), keepFileCol = false,
+            posDels = delPosLines(lines))
+          val post = readFiles(spark, table, add, declared)
+          val preD = pre.exceptAll(post)
+          val postD = post.exceptAll(pre)
+          op match {
+            case "update" =>
+              preD.withColumn(ChangeTypeCol, lit("update_preimage"))
+                .unionByName(postD.withColumn(ChangeTypeCol,
+                  lit("update_postimage")))
+            case "delete" =>
+              preD.withColumn(ChangeTypeCol, lit("delete"))
+            case _ =>
+              preD.withColumn(ChangeTypeCol, lit("delete"))
+                .unionByName(postD.withColumn(ChangeTypeCol,
+                  lit("insert")))
+          }
+        })
+      commit(metaLines(lines, op) ++ cdc.map(CdcPrefix + _) ++
+        files.filterNot(remove.contains) ++ add, staged = cdc)
     }
-  }
 
   /** Keyed UPSERT (merge): rows of `updates` REPLACE current rows with
     * the same `key`; unmatched update rows are inserts. Copy-on-write:
@@ -2662,9 +2694,11 @@ object VersionedTable {
     * validates every rewritten input is still live, rebases over raced
     * appends, and retries from scratch otherwise; writer txn watermarks
     * carry forward. Returns the committed version (or the current one if
-    * `updates` is empty).
-    */
-  /** @param txn optional (writerId, epoch) idempotence watermark: the
+    * `updates` is empty). Sustained appends intersecting the key range
+    * legitimately starve an optimistic upsert until it gives up — the
+    * contract of Delta's ConcurrentAppendException: back off and retry.
+    *
+    * @param txn optional (writerId, epoch) idempotence watermark: the
     *   upsert is a NO-OP if the writer already committed this epoch, and
     *   the commit records it — the exactly-once contract of
     *   [[appendIdempotent]] extended to merges, which is what a CDC
@@ -2672,8 +2706,7 @@ object VersionedTable {
     *   [[graft.streaming.VersionedSink.upsertExactlyOnce]]).
     */
   def upsert(spark: SparkSession, updates0: DataFrame, table: String,
-      key: String, maxRetries: Int = 20,
-      txn: Option[(String, Long)] = None): Long = {
+      key: String, txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{col, max => smax, min => smin}
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     // align to the declared schema up front so the rewritten survivors
@@ -2703,129 +2736,85 @@ object VersionedTable {
       // the watermark must still advance — the batch WAS processed —
       // so route through the idempotent append.
       return txn match {
-        case Some((w, e)) =>
-          appendIdempotent(spark, updates, table, w, e, maxRetries)
+        case Some((w, e)) => appendIdempotent(spark, updates, table, w, e)
         case None =>
           if (updates.isEmpty) latest(spark, table)._1
-          else append(spark, updates, table, maxRetries)
+          else append(spark, updates, table)
       }
     }
     val (lo, hi) = (b.get(0), b.get(1))
     val conf = spark.sparkContext.hadoopConfiguration
-    txn.foreach { case (w, _) =>
-      require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
-        "writerId must be non-empty, no spaces")
-    }
+    txn.foreach { case (w, _) => requireWriterId(w) }
     // replay check BEFORE staging anything
-    txn match {
-      case Some((w, e))
-          if txnMap(latestRaw(spark, table)._2).get(w).exists(_ >= e) =>
-        return latest(spark, table)._1
-      case _ =>
+    if (txn.isDefined) {
+      val (v0, lines0) = latestRaw(spark, table)
+      if (replayed(lines0, txn)) return v0
     }
     val newFiles = stage(spark, updates, table, cluster = true)
-    var attempt = 0
-    var lastRewritten: Seq[String] = Nil
-    try {
-      while (attempt < maxRetries) {
-        val (_, lines) = latestRaw(spark, table)
-        val files = lines.filterNot(_.startsWith("#"))
+    try commitLoop(spark, table, "upsert", preStaged = newFiles) {
+      (v, lines) =>
+        val files = dataFiles(lines)
         // replay re-check inside the OCC loop: a racing instance of the
         // same writer may have committed this epoch while we retried
-        txn match {
-          case Some((w, e)) if txnMap(lines).get(w).exists(_ >= e) =>
-            val f = fs(spark, table)
-            newFiles.foreach(n => f.delete(new Path(table, n), false))
-            return latest(spark, table)._1
-          case _ =>
-        }
-        val affected = files.filter(n =>
-          fileIntersects(conf, new Path(table, n), key, lo, hi, isString))
-        // delete-aware snapshot read (NOT a raw parquet read): a
-        // pending merge-on-read layer may hide rows of the affected
-        // files, and a rewrite that copied them forward would give
-        // them a fresh name/higher file version that escapes both
-        // layer types — silently resurrecting deleted rows. ONE lazy
-        // frame shared by the survivor rewrite and the CDC staging
-        // (resolution work per snapshot version is cached, but the
-        // plan/setup cost isn't free either).
-        lazy val existing =
-          if (affected.isEmpty) null
-          else snapRead(spark, table, affected, lines)
-        val rewritten =
-          if (affected.isEmpty) Nil
-          else {
-            val survivors = existing.join(updKeys, Seq(key), "left_anti")
-            stage(spark, stampFieldIds(survivors, schemaLine(lines)), table)
-          }
-        val cdc = stageCdcIfEnabled(spark, table, lines, {
-          // write-time rows give EXACT pre/post pairing (the derivation
-          // fallback can only say delete+insert): replaced rows are
-          // update_preimage, their new versions update_postimage,
-          // unmatched update rows plain inserts
-          import org.apache.spark.sql.functions.lit
-          if (affected.isEmpty)
-            updates.withColumn(ChangeTypeCol, lit("insert"))
-          else {
-            val pre = existing.join(updKeys, Seq(key), "left_semi")
-            val preKeys = pre.select(col(key))
-            pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-              .unionByName(updates.join(preKeys, Seq(key), "left_semi")
-                .withColumn(ChangeTypeCol, lit("update_postimage")))
-              .unionByName(updates.join(preKeys, Seq(key), "left_anti")
-                .withColumn(ChangeTypeCol, lit("insert")))
-          }
-        })
-        lastRewritten = rewritten ++ cdc
-        commitRaceHook()
-        val (v2, lines2) = latestRaw(spark, table)
-        val files2 = lines2.filterNot(_.startsWith("#"))
-        // WRITE-WRITE conflict detection (Delta's ConcurrentAppend rule):
-        // a file appended between our snapshot and our commit may hold
-        // rows with keys this upsert replaces — rebasing over it would
-        // leave both versions live. Rebase only appends whose footer key
-        // range is DISJOINT from the update range; otherwise retry from
-        // the new snapshot (the re-run anti-joins them too).
-        val racedAppends = files2.filterNot(files.contains)
-        val conflicting = racedAppends.exists(n =>
-          fileIntersects(conf, new Path(table, n), key, lo, hi, isString))
-        val meta = txn match {
-          case Some((w, e)) =>
-            lines2.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-              l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-              l.startsWith(PropPrefix)) ++
-              txnLines(txnMap(lines2) + (w -> e)) :+ (OpPrefix + "upsert")
-          case None => metaLines(lines2, "upsert")
-        }
-        // the rewritten files escape any delete layer committed AFTER
-        // our snapshot read (fresh names, higher file version), so a
-        // changed layer forces a retry like a conflicting append
-        val committed = !conflicting &&
-          affected.forall(files2.contains) &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-            tryCommit(spark, table, v2 + 1,
-              meta ++ cdc.map(CdcPrefix + _) ++
+        if (replayed(lines, txn)) Done(v)
+        else {
+          val affected = files.filter(n =>
+            fileIntersects(conf, new Path(table, n), key, lo, hi, isString))
+          // delete-aware snapshot read (NOT a raw parquet read): a
+          // pending merge-on-read layer may hide rows of the affected
+          // files, and a rewrite that copied them forward would give
+          // them a fresh name/higher file version that escapes both
+          // layer types — silently resurrecting deleted rows. ONE lazy
+          // frame shared by the survivor rewrite and the CDC staging
+          // (resolution work per snapshot version is cached, but the
+          // plan/setup cost isn't free either).
+          lazy val existing =
+            if (affected.isEmpty) null
+            else snapRead(spark, table, affected, lines)
+          val rewritten =
+            if (affected.isEmpty) Nil
+            else {
+              val survivors = existing.join(updKeys, Seq(key), "left_anti")
+              stage(spark, stampFieldIds(survivors, schemaLine(lines)), table)
+            }
+          val cdc = stageCdcIfEnabled(spark, table, lines, {
+            // write-time rows give EXACT pre/post pairing (the derivation
+            // fallback can only say delete+insert): replaced rows are
+            // update_preimage, their new versions update_postimage,
+            // unmatched update rows plain inserts
+            import org.apache.spark.sql.functions.lit
+            if (affected.isEmpty)
+              updates.withColumn(ChangeTypeCol, lit("insert"))
+            else {
+              val pre = existing.join(updKeys, Seq(key), "left_semi")
+              val preKeys = pre.select(col(key))
+              pre.withColumn(ChangeTypeCol, lit("update_preimage"))
+                .unionByName(updates.join(preKeys, Seq(key), "left_semi")
+                  .withColumn(ChangeTypeCol, lit("update_postimage")))
+                .unionByName(updates.join(preKeys, Seq(key), "left_anti")
+                  .withColumn(ChangeTypeCol, lit("insert")))
+            }
+          })
+          rebase(rewritten ++ cdc) { (_, lines2) =>
+            val files2 = dataFiles(lines2)
+            // WRITE-WRITE conflict detection (Delta's ConcurrentAppend
+            // rule): a file appended between our snapshot and our commit
+            // may hold rows with keys this upsert replaces — rebasing over
+            // it would leave both versions live. Rebase only appends whose
+            // footer key range is DISJOINT from the update range;
+            // otherwise retry from the new snapshot (the re-run anti-joins
+            // them too). The rewritten files escape any delete layer
+            // committed AFTER our snapshot read (fresh names, higher file
+            // version), so a changed layer forces a retry too.
+            val conflicting = files2.filterNot(files.contains).exists(n =>
+              fileIntersects(conf, new Path(table, n), key, lo, hi, isString))
+            Option.when(!conflicting && affected.forall(files2.contains) &&
+                deleteLayer(lines2) == deleteLayer(lines))(
+              metaLines(lines2, "upsert", txn = txn) ++
+                cdc.map(CdcPrefix + _) ++
                 files2.filterNot(affected.contains) ++ rewritten ++ newFiles)
-        if (committed) return v2 + 1
-        val f = fs(spark, table)
-        (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-        lastRewritten = Nil
-        attempt += 1
-      }
-      val f = fs(spark, table)
-      newFiles.foreach(n => f.delete(new Path(table, n), false))
-      // sustained appends intersecting the key range legitimately starve
-      // an optimistic upsert — same contract as Delta's
-      // ConcurrentAppendException: the caller backs off and retries
-      throw new IllegalStateException(
-        s"upsert lost $maxRetries commit races (concurrent appends kept " +
-          "intersecting the update key range) — back off and retry")
-    } catch {
-      case e: Throwable if !e.isInstanceOf[IllegalStateException] =>
-        val f = fs(spark, table)
-        (newFiles ++ lastRewritten)
-          .foreach(n => f.delete(new Path(table, n), false))
-        throw e
+          }
+        }
     } finally updKeys.unpersist()
   }
 
@@ -2839,60 +2828,50 @@ object VersionedTable {
     */
   def update(spark: SparkSession, table: String,
       predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column],
-      maxRetries: Int = 20): Long = {
+      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(assignments.nonEmpty, "update needs at least one assignment")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) return v
-      val snap = snapReadWithFile(spark, table, files, lines)
-      assignments.keys.foreach { c =>
-        require(snap.columns.contains(c), s"no such column to SET: $c")
-      }
-      val affected = snap.where(predicate)
-        .select(col("__vt_file")).distinct().collect()
-        .map(_.getString(0)).toSeq
-      if (affected.isEmpty) return v
-      val hit = coalesce(predicate, lit(false))
-      val rewrittenDf = assignments.foldLeft(
-        snapRead(spark, table, affected, lines)) {
-        case (df, (c, expr)) =>
-          df.withColumn(c, when(hit, expr).otherwise(col(c)))
-      }
-      val rewritten = stage(spark,
-        stampFieldIds(rewrittenDf, schemaLine(lines)), table)
-      val cdc = stageCdcIfEnabled(spark, table, lines, {
-        // apply the assignments to the PRE rows (the hit predicate is
-        // over original columns, so it must not re-evaluate post-SET)
-        val pre = snapRead(spark, table, affected, lines).where(hit)
-        val post = assignments.foldLeft(pre) {
-          case (df, (c, expr)) => df.withColumn(c, expr)
+    commitLoop(spark, table, "update") { (v, lines) =>
+      val files = dataFiles(lines)
+      val affected =
+        if (files.isEmpty) Nil
+        else {
+          val snap = snapReadWithFile(spark, table, files, lines)
+          assignments.keys.foreach { c =>
+            require(snap.columns.contains(c), s"no such column to SET: $c")
+          }
+          filesWhere(snap, predicate)
         }
-        pre.withColumn(ChangeTypeCol, lit("update_preimage"))
-          .unionByName(post.withColumn(ChangeTypeCol,
-            lit("update_postimage")))
-      })
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      // same conflict rule as delete: any raced data file → retry; a
-      // raced delete-LAYER commit changes no data file but the rewritten
-      // files would escape it (fresh names/higher version) → retry too
-      val committed =
-        files2.toSet == files.toSet &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
+      if (affected.isEmpty) Done(v)
+      else {
+        val hit = coalesce(predicate, lit(false))
+        val rewrittenDf = assignments.foldLeft(
+          snapRead(spark, table, affected, lines)) {
+          case (df, (c, expr)) =>
+            df.withColumn(c, when(hit, expr).otherwise(col(c)))
+        }
+        val rewritten = stage(spark,
+          stampFieldIds(rewrittenDf, schemaLine(lines)), table)
+        val cdc = stageCdcIfEnabled(spark, table, lines, {
+          // apply the assignments to the PRE rows (the hit predicate is
+          // over original columns, so it must not re-evaluate post-SET)
+          val pre = snapRead(spark, table, affected, lines).where(hit)
+          val post = assignments.foldLeft(pre) {
+            case (df, (c, expr)) => df.withColumn(c, expr)
+          }
+          pre.withColumn(ChangeTypeCol, lit("update_preimage"))
+            .unionByName(post.withColumn(ChangeTypeCol,
+              lit("update_postimage")))
+        })
+        // same conflict rule as delete: any raced data file or delete
+        // layer → retry
+        rebase(rewritten ++ cdc) { (_, lines2) =>
+          Option.when(sameSnapshot(lines, lines2))(
             metaLines(lines2, "update") ++ cdc.map(CdcPrefix + _) ++
-              files2.filterNot(affected.contains) ++ rewritten)
-      if (committed) return v2 + 1
-      val f = fs(spark, table)
-      (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+              dataFiles(lines2).filterNot(affected.contains) ++ rewritten)
+        }
+      }
     }
-    throw new IllegalStateException(s"update lost $maxRetries commit races")
   }
 
   /** Atomic predicate overwrite (Delta's replaceWhere): ONE commit that
@@ -2905,60 +2884,45 @@ object VersionedTable {
     */
   def replaceWhere(spark: SparkSession, df: DataFrame, table: String,
       predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20, sortedBy: Seq[String] = Nil): Long = {
+      sortedBy: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val lines1 = latestRaw(spark, table)._2
     val newFiles = stage(spark,
       stampFieldIds(df, schemaLine(lines1)), table, cluster = true,
       sortedBy = sortedBy)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (_, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      val (affected, rewritten) =
-        if (files.isEmpty) (Nil, Nil)
-        else {
-          val snap = snapReadWithFile(spark, table, files, lines)
-          val aff = snap.where(predicate)
-            .select(col("__vt_file")).distinct().collect()
-            .map(_.getString(0)).toSeq
-          if (aff.isEmpty) (Nil, Nil)
+    commitLoop(spark, table, "replaceWhere", preStaged = newFiles) {
+      (_, lines) =>
+        val files = dataFiles(lines)
+        val (affected, rewritten) =
+          if (files.isEmpty) (Nil, Nil)
           else {
-            val survivors = snapRead(spark, table, aff, lines)
-              .where(not(coalesce(predicate, lit(false))))
-            (aff, stage(spark,
-              stampFieldIds(survivors, schemaLine(lines)), table))
+            val aff = filesWhere(
+              snapReadWithFile(spark, table, files, lines), predicate)
+            if (aff.isEmpty) (Nil, Nil)
+            else {
+              val survivors = snapRead(spark, table, aff, lines)
+                .where(not(coalesce(predicate, lit(false))))
+              (aff, stage(spark,
+                stampFieldIds(survivors, schemaLine(lines)), table))
+            }
           }
-        }
-      val cdc = stageCdcIfEnabled(spark, table, lines, {
-        import org.apache.spark.sql.functions.lit
-        val inserts = df.withColumn(ChangeTypeCol, lit("insert"))
-        if (affected.isEmpty) inserts
-        else snapRead(spark, table, affected, lines)
-          .where(coalesce(predicate, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete"))
-          // df need not carry every declared column (reads null-fill) —
-          // the CDC rows mirror that
-          .unionByName(inserts, allowMissingColumns = true)
-      })
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      val committed =
-        files2.toSet == files.toSet &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
+        val cdc = stageCdcIfEnabled(spark, table, lines, {
+          val inserts = df.withColumn(ChangeTypeCol, lit("insert"))
+          if (affected.isEmpty) inserts
+          else snapRead(spark, table, affected, lines)
+            .where(coalesce(predicate, lit(false)))
+            .withColumn(ChangeTypeCol, lit("delete"))
+            // df need not carry every declared column (reads null-fill) —
+            // the CDC rows mirror that
+            .unionByName(inserts, allowMissingColumns = true)
+        })
+        rebase(rewritten ++ cdc) { (_, lines2) =>
+          Option.when(sameSnapshot(lines, lines2))(
             metaLines(lines2, "replace") ++ cdc.map(CdcPrefix + _) ++
-              files2.filterNot(affected.contains) ++ rewritten ++ newFiles)
-      if (committed) return v2 + 1
-      val f = fs(spark, table)
-      (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+              dataFiles(lines2).filterNot(affected.contains) ++ rewritten ++
+              newFiles)
+        }
     }
-    val f = fs(spark, table)
-    newFiles.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"replaceWhere lost $maxRetries commit races")
   }
 
   /** Overwrite: one atomic commit whose snapshot is exactly `df` — the
@@ -2968,8 +2932,7 @@ object VersionedTable {
     * loudly unless the consumer opted into skipping row-level commits.
     */
   def overwrite(spark: SparkSession, df: DataFrame, table: String,
-      maxRetries: Int = 20, evolveSchema: Boolean = false,
-      sortedBy: Seq[String] = Nil): Long = {
+      evolveSchema: Boolean = false, sortedBy: Seq[String] = Nil): Long = {
     val lines0 = latestRaw(spark, table)._2
     val (aligned, extras) = schemaLine(lines0) match {
       case Some(sc) => alignToSchema(df, sc, evolveSchema, table)
@@ -2977,18 +2940,11 @@ object VersionedTable {
     }
     val staged = stage(spark, aligned, table, cluster = true,
       sortedBy = sortedBy)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    commitLoop(spark, table, "overwrite", preStaged = staged) { (_, lines) =>
       val newSchema = schemaLine(lines).flatMap(widen(_, extras))
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "overwrite", newSchema,
-            dropDeletes = true) ++ staged)) return v + 1
-      attempt += 1
+      commit(metaLines(lines, "overwrite", newSchema, dropDeletes = true) ++
+        staged)
     }
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(s"overwrite lost $maxRetries commit races")
   }
 
   /** REPLACE TABLE: one atomic commit whose snapshot is exactly `df`
@@ -3003,7 +2959,7 @@ object VersionedTable {
     */
   def replaceTable(spark: SparkSession, df: DataFrame, table: String,
       schema0: org.apache.spark.sql.types.StructType,
-      maxRetries: Int = 20, sortedBy: Seq[String] = Nil): Long = {
+      sortedBy: Seq[String] = Nil): Long = {
     require(schema0.nonEmpty, s"cannot replace $table with an empty schema")
     // ids resolved ONCE before staging (files are written with them);
     // the commit's #fid only ever moves UP past concurrent allocations
@@ -3016,21 +2972,13 @@ object VersionedTable {
     val aligned = alignToSchema(df, schema, evolve = false, table)._1
     val staged = stage(spark, aligned, table, sortedBy = sortedBy,
       markerSchema = Some(schema))
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val meta = lines.filter(l =>
-          l.startsWith(TxnPrefix) || l.startsWith(TagPrefix)) ++
-        Seq(SchemaPrefix + schema.json,
-          FidPrefix + math.max(fid, fidOf(lines)),
-          OpPrefix + "replace-table")
-      if (tryCommit(spark, table, v + 1, meta ++ staged)) return v + 1
-      attempt += 1
+    commitLoop(spark, table, "replaceTable", preStaged = staged) {
+      (_, lines) =>
+        // txn watermarks and tags carry; layers and properties drop
+        commit(metaLines(lines, "replace-table", Some(schema),
+          dropDeletes = true, newProps = Some(Map.empty),
+          newFid = Some(math.max(fid, fidOf(lines)))) ++ staged)
     }
-    val f = fs(spark, table)
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"replaceTable lost $maxRetries commit races")
   }
 
   /** RESTORE TABLE to the snapshot of `version` (Delta `RESTORE ...
@@ -3056,8 +3004,7 @@ object VersionedTable {
     * layers reach into retained files). Changefeed consumers without
     * CDC see it as a row-level commit (resync or opt into skipping).
     */
-  def restore(spark: SparkSession, table: String, version: Long,
-      maxRetries: Int = 20): Long = {
+  def restore(spark: SparkSession, table: String, version: Long): Long = {
     import org.apache.spark.sql.functions.lit
     val f = fs(spark, table)
     require(version >= 1, s"cannot restore $table to version $version")
@@ -3065,7 +3012,7 @@ object VersionedTable {
       s"cannot restore $table to v$version: no such committed version " +
         "(or its manifest was vacuumed — retention bounds restore reach)")
     val target = readManifestRaw(f, table, version)
-    val targetFiles = target.filterNot(_.startsWith("#"))
+    val targetFiles = dataFiles(target)
     val targetRefs = targetFiles ++ delLines(target).map(_._1) ++
       delPosLines(target)
     val gone = targetRefs.filterNot(n => f.exists(new Path(table, n)))
@@ -3074,56 +3021,51 @@ object VersionedTable {
         s"${gone.take(3).mkString(", ")}${if (gone.sizeIs > 3) ", …" else ""}" +
         " were vacuumed")
     val targetSchema = schemaLine(target)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      if (v == version) return v
-      val curFiles = lines.filterNot(_.startsWith("#"))
+    commitLoop(spark, table, "restore") { (v, lines) =>
+      val curFiles = dataFiles(lines)
       val sameState = curFiles.toSet == targetFiles.toSet &&
         deleteLayer(lines) == deleteLayer(target) &&
         schemaLine(lines).map(_.json) == targetSchema.map(_.json)
-      if (sameState) return v
-      val removed = curFiles.filterNot(targetFiles.contains)
-      val added = targetFiles.filterNot(curFiles.contains)
-      val layerChanged = deleteLayer(lines) != deleteLayer(target)
-      // CDC context: current props decide enablement, but the change
-      // frame is built under the TARGET schema (the declared schema
-      // after this commit) so its field-id stamping matches
-      val cdcCtx = lines.filterNot(_.startsWith(SchemaPrefix)) ++
-        targetSchema.map(SchemaPrefix + _.json)
-      val cdc = stageCdcIfEnabled(spark, table, cdcCtx, {
-        val (preFiles, postFiles) =
-          if (layerChanged) (curFiles, targetFiles) else (removed, added)
-        val pre = readFilesDeleteAware(spark, table, preFiles, targetSchema,
-          delLines(lines), keepFileCol = false, posDels = delPosLines(lines))
-        val post = readFilesDeleteAware(spark, table, postFiles,
-          targetSchema, delLines(target), keepFileCol = false,
-          posDels = delPosLines(target))
-        pre.exceptAll(post).withColumn(ChangeTypeCol, lit("delete"))
-          .unionByName(
-            post.exceptAll(pre).withColumn(ChangeTypeCol, lit("insert")))
-      })
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      // strict conflict rule: ANY commit since the pinned snapshot (new
-      // files, layer change, schema change) invalidates the staged CDC
-      // diff and the no-op check — retry from scratch
-      val committed = v2 == v &&
-        tryCommit(spark, table, v2 + 1,
-          lines2.filter(l =>
-            l.startsWith(TxnPrefix) || l.startsWith(TagPrefix)) ++
-            targetSchema.map(SchemaPrefix + _.json).toSeq ++
-            Seq(FidPrefix + math.max(fidOf(lines2), fidOf(target))) ++
-            propLines(propMap(lines2)) ++
-            target.filter(l => l.startsWith(DelPrefix) ||
-              l.startsWith(DelPosPrefix) || l.startsWith(StatsPrefix)) ++
-            cdc.map(CdcPrefix + _) :+ (OpPrefix + "restore") :++
-            targetFiles)
-      if (committed) return v2 + 1
-      cdc.foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+      if (v == version || sameState) Done(v)
+      else {
+        val removed = curFiles.filterNot(targetFiles.contains)
+        val added = targetFiles.filterNot(curFiles.contains)
+        val layerChanged = deleteLayer(lines) != deleteLayer(target)
+        // CDC context: current props decide enablement, but the change
+        // frame is built under the TARGET schema (the declared schema
+        // after this commit) so its field-id stamping matches
+        val cdcCtx = lines.filterNot(_.startsWith(SchemaPrefix)) ++
+          targetSchema.map(SchemaPrefix + _.json)
+        val cdc = stageCdcIfEnabled(spark, table, cdcCtx, {
+          val (preFiles, postFiles) =
+            if (layerChanged) (curFiles, targetFiles) else (removed, added)
+          val pre = readFilesDeleteAware(spark, table, preFiles,
+            targetSchema, delLines(lines), keepFileCol = false,
+            posDels = delPosLines(lines))
+          val post = readFilesDeleteAware(spark, table, postFiles,
+            targetSchema, delLines(target), keepFileCol = false,
+            posDels = delPosLines(target))
+          pre.exceptAll(post).withColumn(ChangeTypeCol, lit("delete"))
+            .unionByName(
+              post.exceptAll(pre).withColumn(ChangeTypeCol, lit("insert")))
+        })
+        // strict conflict rule: ANY commit since the pinned snapshot (new
+        // files, layer change, schema change) invalidates the staged CDC
+        // diff and the no-op check — retry from scratch
+        rebase(cdc) { (v2, lines2) =>
+          Option.when(v2 == v)(
+            lines2.filter(l =>
+              l.startsWith(TxnPrefix) || l.startsWith(TagPrefix)) ++
+              targetSchema.map(SchemaPrefix + _.json).toSeq ++
+              Seq(FidPrefix + math.max(fidOf(lines2), fidOf(target))) ++
+              propLines(propMap(lines2)) ++
+              target.filter(l => l.startsWith(DelPrefix) ||
+                l.startsWith(DelPosPrefix) || l.startsWith(StatsPrefix)) ++
+              cdc.map(CdcPrefix + _) :+ (OpPrefix + "restore") :++
+              targetFiles)
+        }
+      }
     }
-    throw new IllegalStateException(s"restore lost $maxRetries commit races")
   }
 
   // ---------- named snapshot refs (tags) ----------
@@ -3157,46 +3099,30 @@ object VersionedTable {
     * (unchanged when the tag already points there).
     */
   def tag(spark: SparkSession, table: String, name: String,
-      version: Option[Long] = None, maxRetries: Int = 20): Long = {
+      version: Option[Long] = None): Long = {
     requireTagName(name)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    commitLoop(spark, table, "tag") { (v, lines) =>
       val target = version.getOrElse(v)
       require(target >= 1 && target <= v,
         s"cannot tag $table@$target: no such committed version (latest $v)")
       require(fs(spark, table).exists(commitPath(table, target)),
         s"cannot tag $table@$target: its manifest was vacuumed")
-      if (tagMap(lines).get(name).contains(target)) return v
-      val next = tagMap(lines) + (name -> target)
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "tag").filterNot(_.startsWith(TagPrefix)) ++
-            tagLines(next) ++ lines.filterNot(_.startsWith("#"))))
-        return v + 1
-      attempt += 1
+      if (tagMap(lines).get(name).contains(target)) Done(v)
+      else commit(metaLines(lines, "tag").filterNot(_.startsWith(TagPrefix)) ++
+        tagLines(tagMap(lines) + (name -> target)) ++ dataFiles(lines))
     }
-    throw new IllegalStateException(s"tag lost $maxRetries commit races")
   }
 
   /** Drop the named ref; its version stays time-travelable by number
     * until vacuum reclaims it. No-op (current version returned) if the
     * tag does not exist.
     */
-  def untag(spark: SparkSession, table: String, name: String,
-      maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      if (!tagMap(lines).contains(name)) return v
-      val next = tagMap(lines) - name
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "untag").filterNot(_.startsWith(TagPrefix)) ++
-            tagLines(next) ++ lines.filterNot(_.startsWith("#"))))
-        return v + 1
-      attempt += 1
+  def untag(spark: SparkSession, table: String, name: String): Long =
+    commitLoop(spark, table, "untag") { (v, lines) =>
+      if (!tagMap(lines).contains(name)) Done(v)
+      else commit(metaLines(lines, "untag").filterNot(_.startsWith(TagPrefix)) ++
+        tagLines(tagMap(lines) - name) ++ dataFiles(lines))
     }
-    throw new IllegalStateException(s"untag lost $maxRetries commit races")
-  }
 
   /** A version reference as read surfaces accept it: a bare number is
     * a commit version, anything else a tag name (loud error listing
@@ -3219,60 +3145,39 @@ object VersionedTable {
     * committed version (unchanged if nothing matched).
     */
   def delete(spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) return v
-      val snap = snapReadWithFile(spark, table, files, lines)
-      val affected = snap.where(predicate)
-        .select(col("__vt_file")).distinct().collect()
-        .map(_.getString(0)).toSeq
-      if (affected.isEmpty) return v
-      val survivors = snapRead(spark, table, affected, lines)
-        .where(not(coalesce(predicate, lit(false))))
-      val rewritten = stage(spark,
-        stampFieldIds(survivors, schemaLine(lines)), table)
-      val cdc = stageCdcIfEnabled(spark, table, lines,
-        snapRead(spark, table, affected, lines)
-          .where(coalesce(predicate, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete")))
-      commitRaceHook()
-      val (v2, lines2) = latestRaw(spark, table)
-      val files2 = lines2.filterNot(_.startsWith("#"))
-      // conflict rule: an arbitrary predicate can't be footer-checked
-      // against raced appends (they may contain matching rows), so ANY
-      // new data file forces a retry over the fresh snapshot; likewise
-      // a raced delete-layer commit (no data file change, but the
-      // rewritten files would escape the new layer). Stricter than
-      // upsert's key-range test; deletes under heavy append traffic
-      // pay retries, never correctness.
-      val committed =
-        files2.toSet == files.toSet &&
-          deleteLayer(lines2) == deleteLayer(lines) &&
-          tryCommit(spark, table, v2 + 1,
+      predicate: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    commitLoop(spark, table, "delete") { (v, lines) =>
+      val files = dataFiles(lines)
+      val affected =
+        if (files.isEmpty) Nil
+        else filesWhere(snapReadWithFile(spark, table, files, lines), predicate)
+      if (affected.isEmpty) Done(v)
+      else {
+        val survivors = snapRead(spark, table, affected, lines)
+          .where(not(coalesce(predicate, lit(false))))
+        val rewritten = stage(spark,
+          stampFieldIds(survivors, schemaLine(lines)), table)
+        val cdc = stageCdcIfEnabled(spark, table, lines,
+          snapRead(spark, table, affected, lines)
+            .where(coalesce(predicate, lit(false)))
+            .withColumn(ChangeTypeCol, lit("delete")))
+        // conflict rule: an arbitrary predicate can't be footer-checked
+        // against raced appends (they may contain matching rows), so ANY
+        // new data file forces a retry over the fresh snapshot; likewise
+        // a raced delete-layer commit (no data file change, but the
+        // rewritten files would escape the new layer). Stricter than
+        // upsert's key-range test; deletes under heavy append traffic
+        // pay retries, never correctness.
+        rebase(rewritten ++ cdc) { (_, lines2) =>
+          Option.when(sameSnapshot(lines, lines2))(
             metaLines(lines2, "delete") ++ cdc.map(CdcPrefix + _) ++
-              files2.filterNot(affected.contains) ++ rewritten)
-      if (committed) return v2 + 1
-      val f = fs(spark, table)
-      (rewritten ++ cdc).foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+              dataFiles(lines2).filterNot(affected.contains) ++ rewritten)
+        }
+      }
     }
-    throw new IllegalStateException(s"delete lost $maxRetries commit races")
   }
 
-  /** Delete data files referenced by NO manifest version >= `keepFrom`
-    * (older-snapshot readers must be done first — the usual vacuum
-    * contract), plus manifests < keepFrom. `retentionMs` is the file-age
-    * guard that makes vacuum safe alongside in-flight writers: their
-    * staged-but-uncommitted files look unreferenced but are NEW — only
-    * unreferenced files older than the window are reaped (the same
-    * contract as Delta's retention check; default 7 days). Pass 0 only
-    * when no writer can be in flight.
-    */
   /** Merge-on-read DELETE by key: the CDC shape — `keys` is a frame
     * whose columns name the equality key(s) and whose rows are the keys
     * to delete. NOTHING is rewritten: the keys are staged as a small
@@ -3290,82 +3195,55 @@ object VersionedTable {
     * parquet reader cannot apply joins — the same reader-protocol gate
     * as Delta's deletion vectors); compact first, or read through this
     * API.
-    */
-  /** @param txn optional (writerId, epoch) idempotence watermark — the
+    *
+    * @param txn optional (writerId, epoch) idempotence watermark — the
     *   exactly-once contract of [[appendIdempotent]] for CDC delete
     *   streams: a replayed epoch is a no-op, and an empty batch still
     *   advances the watermark (the batch WAS processed).
     */
   def deleteByKeys(spark: SparkSession, table: String, keys: DataFrame,
-      maxRetries: Int = 20, txn: Option[(String, Long)] = None): Long = {
+      txn: Option[(String, Long)] = None): Long = {
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
     keyCols.foreach(c => require(!c.exists(_.isWhitespace),
       s"key column name '$c' must not contain whitespace (manifest format)"))
-    txn.foreach { case (w, _) =>
-      require(w.nonEmpty && !w.contains(" ") && !w.contains("\n"),
-        "writerId must be non-empty, no spaces")
-    }
+    txn.foreach { case (w, _) => requireWriterId(w) }
     val snapCols = read(spark, table).columns.toSet
     keyCols.foreach(c => require(snapCols.contains(c),
       s"delete key column '$c' is not a column of $table"))
     // replay check BEFORE staging anything
-    txn match {
-      case Some((w, e))
-          if txnMap(latestRaw(spark, table)._2).get(w).exists(_ >= e) =>
-        return latest(spark, table)._1
-      case _ =>
+    if (txn.isDefined) {
+      val (v0, lines0) = latestRaw(spark, table)
+      if (replayed(lines0, txn)) return v0
     }
     val clean = keys.na.drop("any", keyCols).dropDuplicates(keyCols)
     val noKeys = clean.isEmpty
     if (noKeys && txn.isEmpty) return latest(spark, table)._1
     val staged =
       if (noKeys) Nil else stage(spark, clean, table, prefix = "del-")
-    val f = fs(spark, table)
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
-      // replay re-check inside the OCC loop (racing instance of the
-      // same restarted query)
-      txn match {
-        case Some((w, e)) if txnMap(lines).get(w).exists(_ >= e) =>
-          staged.foreach(n => f.delete(new Path(table, n), false))
-          return v
-        case _ =>
-      }
-      val meta = txn match {
-        case Some((w, e)) =>
-          lines.filter(l => l.startsWith(SchemaPrefix) || l.startsWith(FidPrefix) ||
-            l.startsWith(DelPrefix) || l.startsWith(DelPosPrefix) ||
-            l.startsWith(PropPrefix)) ++
-            txnLines(txnMap(lines) + (w -> e)) :+ (OpPrefix + "delete-mor")
-        case None => metaLines(lines, "delete-mor")
-      }
-      val newDelLines = staged.map(n =>
-        DelPrefix + ((n +: (v + 1).toString +: keyCols).mkString(" ")))
-      // CDF property on: record the exact rows this layer hides (the
-      // VISIBLE rows matching the keys) — costs one bounded scan, only
-      // when the table opted into the feed
-      val cdc =
-        if (noKeys) Nil
-        else stageCdcIfEnabled(spark, table, lines, {
-          import org.apache.spark.sql.functions.lit
-          val files = lines.filterNot(_.startsWith("#"))
-          readFilesDeleteAware(spark, table, files, schemaLine(lines),
-            delLines(lines), keepFileCol = false,
-            posDels = delPosLines(lines))
-            .join(clean, keyCols, "left_semi")
-            .withColumn(ChangeTypeCol, lit("delete"))
-        })
-      if (tryCommit(spark, table, v + 1,
-          meta ++ newDelLines ++ cdc.map(CdcPrefix + _) ++
-            lines.filterNot(_.startsWith("#")))) return v + 1
-      cdc.foreach(n => f.delete(new Path(table, n), false))
-      attempt += 1
+    commitLoop(spark, table, "deleteByKeys", preStaged = staged) {
+      (v, lines) =>
+        // replay re-check inside the OCC loop (racing instance of the
+        // same restarted query)
+        if (replayed(lines, txn)) Done(v)
+        else {
+          val newDelLines = staged.map(n =>
+            DelPrefix + ((n +: (v + 1).toString +: keyCols).mkString(" ")))
+          // CDF property on: record the exact rows this layer hides (the
+          // VISIBLE rows matching the keys) — costs one bounded scan, only
+          // when the table opted into the feed
+          val cdc =
+            if (noKeys) Nil
+            else stageCdcIfEnabled(spark, table, lines, {
+              import org.apache.spark.sql.functions.lit
+              snapRead(spark, table, dataFiles(lines), lines)
+                .join(clean, keyCols, "left_semi")
+                .withColumn(ChangeTypeCol, lit("delete"))
+            })
+          commit(metaLines(lines, "delete-mor", txn = txn) ++ newDelLines ++
+            cdc.map(CdcPrefix + _) ++ dataFiles(lines), staged = cdc)
+        }
     }
-    staged.foreach(n => f.delete(new Path(table, n), false))
-    throw new IllegalStateException(
-      s"deleteByKeys lost $maxRetries commit races")
   }
 
   /** Merge-on-read DELETE by PREDICATE — [[deleteByKeys]]' arbitrary-
@@ -3391,49 +3269,27 @@ object VersionedTable {
     * file would silently miss.
     */
   def deleteWhereMergeOnRead(spark: SparkSession, table: String,
-      predicate: org.apache.spark.sql.Column,
-      maxRetries: Int = 20): Long = {
-    import org.apache.spark.sql.functions.col
-    val f = fs(spark, table)
-    var attempt = 0
-    var staged: Seq[String] = Nil
-    try {
-      while (attempt < maxRetries) {
-        val (v, lines) = latestRaw(spark, table)
-        val files = lines.filterNot(_.startsWith("#"))
-        if (files.isEmpty) return v
-        val matched = snapReadWithFilePos(spark, table, files, lines)
-          .where(predicate)
-        val hits = matched.select(col("__vt_file"), col("__vt_pos"))
-        if (hits.isEmpty) return v
+      predicate: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions.{col, lit}
+    commitLoop(spark, table, "deleteWhereMergeOnRead") { (v, lines) =>
+      val files = dataFiles(lines)
+      lazy val matched = snapReadWithFilePos(spark, table, files, lines)
+        .where(predicate)
+      lazy val hits = matched.select(col("__vt_file"), col("__vt_pos"))
+      if (files.isEmpty || hits.isEmpty) Done(v)
+      else {
         val posFiles = stage(spark, hits, table, prefix = "delpos-")
-        val cdc = stageCdcIfEnabled(spark, table, lines, {
-          import org.apache.spark.sql.functions.lit
+        val cdc = stageCdcIfEnabled(spark, table, lines,
           matched.drop("__vt_file", "__vt_pos")
-            .withColumn(ChangeTypeCol, lit("delete"))
-        })
-        staged = posFiles ++ cdc
-        val (v2, lines2) = latestRaw(spark, table)
-        // any raced commit (append/rewrite/compact) invalidates the
-        // scanned snapshot: stale positions would be wrong for rewritten
-        // files and absent for new ones — rescan from scratch
-        val committed = v2 == v &&
-          tryCommit(spark, table, v2 + 1,
-            metaLines(lines2, "delete-mor") ++
-              posFiles.map(DelPosPrefix + _) ++
-              cdc.map(CdcPrefix + _) ++
-              lines2.filterNot(_.startsWith("#")))
-        if (committed) return v2 + 1
-        staged.foreach(n => f.delete(new Path(table, n), false))
-        staged = Nil
-        attempt += 1
+            .withColumn(ChangeTypeCol, lit("delete")))
+        // committed over the pinned snapshot: any raced commit (append/
+        // rewrite/compact) takes version v+1 first, and the retry rescans
+        // — stale positions would be wrong for rewritten files and
+        // absent for new ones
+        commit(metaLines(lines, "delete-mor") ++
+          posFiles.map(DelPosPrefix + _) ++ cdc.map(CdcPrefix + _) ++ files,
+          staged = posFiles ++ cdc)
       }
-      throw new IllegalStateException(
-        s"deleteWhereMergeOnRead lost $maxRetries commit races")
-    } catch {
-      case e: Throwable =>
-        staged.foreach(n => f.delete(new Path(table, n), false))
-        throw e
     }
   }
 
@@ -3607,49 +3463,34 @@ object VersionedTable {
     * already has ids everywhere.
     */
   def materializeFieldIds(spark: SparkSession, table: String,
-      numFiles: Int, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+      numFiles: Int): Long =
+    commitLoop(spark, table, "materializeFieldIds") { (v, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"materializeFieldIds needs a declared schema on $table"))
-      if (declared.fields.forall(f => fieldId(f).isDefined)) return v
-      val (idFields, fid) = assignIds(declared.fields.toSeq,
-        math.max(fidOf(lines), maxFieldId(declared)))
-      val idSchema = org.apache.spark.sql.types.StructType(idFields.toArray)
-      val files = lines.filterNot(_.startsWith("#"))
-      if (files.isEmpty) {
-        // metadata-only flip: nothing to rewrite
-        if (tryCommit(spark, table, v + 1,
-            metaLines(lines, "schema", Some(idSchema), newFid = Some(fid))))
-          return v + 1
-        attempt += 1
-      } else {
-        val snapshot = snapRead(spark, table, files, lines)
-        val rewritten = stage(spark,
-          stampFieldIds(snapshot.repartition(numFiles), Some(idSchema)),
-          table)
-        commitRaceHook()
-        val (v2, lines2) = latestRaw(spark, table)
-        val files2 = lines2.filterNot(_.startsWith("#"))
-        // same conflict rules as compact: every input file still live,
-        // delete layer unchanged; raced appends CANNOT rebase here
-        // (they'd stay id-less under the new schema) — strict equality
-        val committed =
-          files2.toSet == files.toSet &&
-            deleteLayer(lines2) == deleteLayer(lines) &&
-            tryCommit(spark, table, v2 + 1,
+      if (declared.fields.forall(f => fieldId(f).isDefined)) Done(v)
+      else {
+        val (idFields, fid) = assignIds(declared.fields.toSeq,
+          math.max(fidOf(lines), maxFieldId(declared)))
+        val idSchema = org.apache.spark.sql.types.StructType(idFields.toArray)
+        val files = dataFiles(lines)
+        if (files.isEmpty) // metadata-only flip: nothing to rewrite
+          commit(metaLines(lines, "schema", Some(idSchema), newFid = Some(fid)))
+        else {
+          val snapshot = snapRead(spark, table, files, lines)
+          val rewritten = stage(spark,
+            stampFieldIds(snapshot.repartition(numFiles), Some(idSchema)),
+            table)
+          // same conflict rules as compact: every input file still live,
+          // delete layer unchanged; raced appends CANNOT rebase here
+          // (they'd stay id-less under the new schema) — strict equality
+          rebase(rewritten) { (_, lines2) =>
+            Option.when(sameSnapshot(lines, lines2))(
               metaLines(lines2, "schema", Some(idSchema),
                 dropDeletes = true, newFid = Some(fid)) ++ rewritten)
-        if (committed) return v2 + 1
-        val f = fs(spark, table)
-        rewritten.foreach(n => f.delete(new Path(table, n), false))
-        attempt += 1
+          }
+        }
       }
     }
-    throw new IllegalStateException(
-      s"materializeFieldIds lost $maxRetries commit races")
-  }
 
   /** RENAME COLUMN: a metadata-only commit replacing the declared
     * schema — the field keeps its parquet field ID, so every data file
@@ -3662,14 +3503,12 @@ object VersionedTable {
     * layer keys on the column (its manifest line stores the NAME).
     */
   def renameColumn(spark: SparkSession, table: String, from: String,
-      to: String, maxRetries: Int = 20): Long = {
+      to: String): Long = {
     require(to.nonEmpty && !to.contains("\n") && !to.contains("."),
       "bad target name (rename the leaf only — no dots)")
     require(!ReservedCdfCols.exists(_.equalsIgnoreCase(to)),
       s"'$to' is a reserved change-data-feed column name")
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+    commitLoop(spark, table, "renameColumn") { (_, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"renameColumn needs a declared schema on $table"))
       val parts = pathParts(declared, from)
@@ -3680,7 +3519,7 @@ object VersionedTable {
         s"column '$from' of $table has no field id — run " +
           "VersionedTable.materializeFieldIds first (schema-merge " +
           "evolution columns stay name-matched)")
-      val files = lines.filterNot(_.startsWith("#"))
+      val files = dataFiles(lines)
       if (parts.length == 1)
         require(filesCarryFieldIds(spark, table, files),
           s"$table has data files without physical field ids — a rename " +
@@ -3717,13 +3556,9 @@ object VersionedTable {
           Some(props1.getOrElse(props0) + (BucketByProperty -> s"$to,$n"))
         case _ => props1
       }
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(renamed), newProps = newProps) ++
-            files)) return v + 1
-      attempt += 1
+      commit(metaLines(lines, "schema", Some(renamed), newProps = newProps) ++
+        files)
     }
-    throw new IllegalStateException(
-      s"renameColumn lost $maxRetries commit races")
   }
 
   /** DROP COLUMN: a metadata-only commit narrowing the declared schema.
@@ -3735,18 +3570,15 @@ object VersionedTable {
     * and refuses while a pending equality-delete layer keys on the
     * column.
     */
-  def dropColumn(spark: SparkSession, table: String, name: String,
-      maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+  def dropColumn(spark: SparkSession, table: String, name: String): Long =
+    commitLoop(spark, table, "dropColumn") { (_, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"dropColumn needs a declared schema on $table"))
       val parts = pathParts(declared, name)
       requireNoConstraintOn(spark, lines, parts.head, table)
       val chain = fieldsAlong(declared, parts, table)
       val target = chain.last
-      val files = lines.filterNot(_.startsWith("#"))
+      val files = dataFiles(lines)
       if (parts.length == 1)
         require(!clusterColsOf(lines).exists(_.equalsIgnoreCase(name)),
           s"'$name' is a $ClusterByProperty column of $table — clear or " +
@@ -3776,13 +3608,8 @@ object VersionedTable {
         org.apache.spark.sql.types.StructType(
           st.fields.filterNot(_ eq target))
       }
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(narrowed)) ++ files)) return v + 1
-      attempt += 1
+      commit(metaLines(lines, "schema", Some(narrowed)) ++ files)
     }
-    throw new IllegalStateException(
-      s"dropColumn lost $maxRetries commit races")
-  }
 
   /** Column position for [[moveColumn]] / SQL `ALTER TABLE ... ALTER
     * COLUMN x FIRST | AFTER y`.
@@ -3801,15 +3628,12 @@ object VersionedTable {
     * align by name, so existing writers are unaffected.
     */
   def moveColumn(spark: SparkSession, table: String, name: String,
-      position: ColumnPosition, maxRetries: Int = 20): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val (v, lines) = latestRaw(spark, table)
+      position: ColumnPosition): Long =
+    commitLoop(spark, table, "moveColumn") { (v, lines) =>
       val declared = schemaLine(lines).getOrElse(throw new IllegalStateException(
         s"moveColumn needs a declared schema on $table"))
       val parts = pathParts(declared, name)
       val target = fieldsAlong(declared, parts, table).last
-      val files = lines.filterNot(_.startsWith("#"))
       val moved = transformParentStruct(declared, parts, table) { st =>
         val rest = st.fields.filterNot(_ eq target)
         val reordered = position match {
@@ -3825,14 +3649,9 @@ object VersionedTable {
         }
         org.apache.spark.sql.types.StructType(reordered)
       }
-      if (moved == declared) return v // already in position: no commit
-      if (tryCommit(spark, table, v + 1,
-          metaLines(lines, "schema", Some(moved)) ++ files)) return v + 1
-      attempt += 1
+      if (moved == declared) Done(v) // already in position: no commit
+      else commit(metaLines(lines, "schema", Some(moved)) ++ dataFiles(lines))
     }
-    throw new IllegalStateException(
-      s"moveColumn lost $maxRetries commit races")
-  }
 
   private def manifestLinesAt(spark: SparkSession, table: String,
       version: Option[Long]): Seq[String] = version match {
@@ -3933,7 +3752,7 @@ object VersionedTable {
     import org.apache.spark.sql.functions._
     val dels = delLines(lines)
     if (dels.isEmpty) return Map.empty
-    val files = lines.filterNot(_.startsWith("#"))
+    val files = dataFiles(lines)
     if (files.isEmpty) return Map.empty
     val fvAll = fileVersions(spark, table)
     val schema = schemaLine(lines)
@@ -4098,6 +3917,15 @@ object VersionedTable {
     1L
   }
 
+  /** Delete data files referenced by NO manifest version >= `keepFrom`
+    * (older-snapshot readers must be done first — the usual vacuum
+    * contract), plus manifests < keepFrom. `retentionMs` is the file-age
+    * guard that makes vacuum safe alongside in-flight writers: their
+    * staged-but-uncommitted files look unreferenced but are NEW — only
+    * unreferenced files older than the window are reaped (the same
+    * contract as Delta's retention check; default 7 days). Pass 0 only
+    * when no writer can be in flight.
+    */
   def vacuum(spark: SparkSession, table: String, keepFrom: Long,
       retentionMs: Long = 7L * 24 * 3600 * 1000): Int = {
     val f = fs(spark, table)

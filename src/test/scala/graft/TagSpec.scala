@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftCatalog, VersionedTable}
+import graft.sources.{GraftCatalog, VersionedTable, Wap}
 
 /** Named snapshot refs (Iceberg tag semantics): `tag()` pins a version
   * under a name in ONE metadata commit, every read surface resolves it
@@ -59,9 +59,23 @@ class TagSpec extends SparkTestBase {
       Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t) // v1
     VersionedTable.tag(spark, t, "pin")            // v2
     VersionedTable.append(spark, Seq((3L, "c")).toDF("k", "v"), t) // v3
-    VersionedTable.compact(spark, t, numFiles = 1) // v4
+    // the txn-watermark commits: streaming sinks, CDC apply, WAP
+    VersionedTable.appendIdempotent(spark,
+      Seq((4L, "d")).toDF("k", "v"), t, "w", 0L)   // v4
     assert(VersionedTable.tags(spark, t) === Map("pin" -> 1L))
-    VersionedTable.restore(spark, t, 1L)           // v5
+    VersionedTable.upsert(spark, Seq((4L, "D")).toDF("k", "v"), t, "k",
+      txn = Some(("w", 1L)))                       // v5
+    assert(VersionedTable.tags(spark, t) === Map("pin" -> 1L))
+    VersionedTable.deleteByKeys(spark, t, Seq(4L).toDF("k"),
+      txn = Some(("w", 2L)))                       // v6
+    assert(VersionedTable.tags(spark, t) === Map("pin" -> 1L))
+    val wap = Wap.begin(spark, t, "tagged")
+    Wap.publish(spark,
+      Wap.write(spark, wap, Seq((5L, "e")).toDF("k", "v")))
+    assert(VersionedTable.tags(spark, t) === Map("pin" -> 1L))     // v7
+    VersionedTable.compact(spark, t, numFiles = 1) // v8
+    assert(VersionedTable.tags(spark, t) === Map("pin" -> 1L))
+    VersionedTable.restore(spark, t, 1L)           // v9
     assert(VersionedTable.tags(spark, t) === Map("pin" -> 1L))
     VersionedTable.replaceTable(spark, Seq((9L, "z")).toDF("k", "v"), t,
       new org.apache.spark.sql.types.StructType()

@@ -207,4 +207,30 @@ class VersionedTableSpec extends SparkTestBase {
     assert(spans.forall { case (sx, sy) => sx <= 31 && sy <= 31 },
       s"files must be sub-grid clustered, got spans ${spans.toSeq}")
   }
+
+  test("a temp-manifest cleanup failure after a won commit still reports " +
+      "the commit won") {
+    // the publish (link/rename) is the decision; deleting the temp file
+    // afterwards is housekeeping. Reporting a cleanup IOException as a
+    // lost race would make append re-list its staged files (duplicate
+    // rows) and compact delete files its published manifest references.
+    val t = Files.createTempDirectory("vt-tmpdel").toString + "/t"
+    FaultyLocalFs.installed(spark) {
+      FaultyLocalFs.failTmpDelete = true
+      assert(VersionedTable.append(spark,
+        Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1), t) === 1L)
+      assert(VersionedTable.append(spark,
+        Seq((3, "c")).toDF("k", "v").coalesce(1), t) === 2L)
+      assert(VersionedTable.compact(spark, t, numFiles = 1) === 3L)
+    }
+    assert(VersionedTable.versions(spark, t) === Seq(1L, 2L, 3L))
+    assert(VersionedTable.history(spark, t).select("op").as[String]
+      .collect().toSeq === Seq("append", "append", "compact"))
+    assert(VersionedTable.read(spark, t).as[(Int, String)].collect()
+      .sorted.toSeq === Seq((1, "a"), (2, "b"), (3, "c")))
+    // every file the compacted snapshot names is still on disk
+    val (_, files) = VersionedTable.latest(spark, t)
+    assert(files.size === 1)
+    assert(files.forall(n => new java.io.File(t, n).exists))
+  }
 }
